@@ -21,6 +21,9 @@ from __future__ import annotations
 
 from collections import deque
 
+#: Most patterns compiled into one regex alternation (Python or JVM).
+MAX_REGEX_PATTERNS = 20_000
+
 
 class AhoCorasick:
     __slots__ = ("goto", "fail", "out", "min_length")
@@ -168,9 +171,9 @@ class RegexMatcher:
         return out
 
 
-def build_matcher(patterns, min_length: int = 1, max_regex_patterns: int = 20000):
+def build_matcher(patterns, min_length: int = 1):
     """Pick the matcher implementation by lexicon size."""
     patterns = list(patterns)
-    if len(patterns) <= max_regex_patterns:
+    if len(patterns) <= MAX_REGEX_PATTERNS:
         return RegexMatcher(patterns, min_length=min_length)
     return AhoCorasick(patterns, min_length=min_length)

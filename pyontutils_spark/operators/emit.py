@@ -51,6 +51,13 @@ def mention_triples(linked: DataFrame) -> DataFrame:
                              F.col("iri"), False)))
 
 
+def page_triples(pages: DataFrame, linked: DataFrame) -> DataFrame:
+    """Page-level triples: page types ∪ page mentions, with no distinct
+    of its own (the caller applies one over whatever it unions in)."""
+    return (page_type_triples(pages.select("url"))
+            .unionByName(mention_triples(linked)))
+
+
 def entity_triple_rows(term: dict):
     """Driver-side flatMap of one lexicon term -> triple dicts
     (lexicon-derived facts; the analog of Class._triples)."""
@@ -104,8 +111,7 @@ def emit_triples(spark: SparkSession, pages: DataFrame, linked: DataFrame,
         linked_cached = linked
     else:
         linked_cached = linked.persist()
-    return (page_type_triples(pages.select("url"))
-            .unionByName(mention_triples(linked_cached))
+    return (page_triples(pages, linked_cached)
             .unionByName(entity_triples(spark, lexicon, linked_cached))
             .distinct())
 

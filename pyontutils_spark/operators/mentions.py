@@ -19,30 +19,42 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..kernel.ac import AhoCorasick, build_matcher
+from ..kernel.ac import MAX_REGEX_PATTERNS, build_matcher
 from ..kernel.norm import local_degrade
 
 MENTION_SCHEMA = ("url string, start int, end int, "
                   "surface string, pattern_norm string")
 
 
+def _patterns(lexicon: list[dict], min_length: int = 3,
+              types: set[str] | None = None) -> set[str]:
+    """Unique degraded label/synonym patterns of at least ``min_length``
+    chars; ``types`` filters lexicon categories (annotate's includeCat)."""
+    pats = set()
+    for t in lexicon:
+        if types is None or t.get("type") in types:
+            pats.add(t["label_norm"])
+            pats.update(map(local_degrade, t.get("synonyms", ())))
+    return {p for p in pats if len(p) >= min_length}
+
+
+def _in_lang(pages: DataFrame, lang_filter: str | None) -> DataFrame:
+    """Declarative language filter ahead of any UDF (pushed to the scan
+    when reading parquet)."""
+    if lang_filter is None:
+        return pages
+    return pages.filter(pages["lang"] == lang_filter)
+
+
 def build_automaton(lexicon: list[dict], min_length: int = 3,
                     types: set[str] | None = None):
     """Unique degraded patterns -> payload is the pattern itself (link
     candidates are resolved later by a broadcast join on pattern_norm).
-    ``types`` filters lexicon categories (annotate's includeCat).
-    Implementation auto-selected: C-speed regex alternation for
-    small/medium lexicons, pure-Python Aho-Corasick past ~20k patterns
-    (identical leftmost-longest semantics either way)."""
-    pats = set()
-    for t in lexicon:
-        if types is not None and t.get("type") not in types:
-            continue
-        pats.add(t["label_norm"])
-        for s in t.get("synonyms", ()):
-            pats.add(local_degrade(s))
-    return build_matcher(((p, p) for p in sorted(pats)),
-                         min_length=min_length)
+    Implementation auto-selected: C-speed regex alternation up to
+    ``MAX_REGEX_PATTERNS``, pure-Python Aho-Corasick past it (identical
+    leftmost-longest semantics either way)."""
+    return build_matcher(((p, p) for p in sorted(
+        _patterns(lexicon, min_length, types))), min_length=min_length)
 
 
 def detect_mentions(pages: DataFrame, automaton_bc,
@@ -52,13 +64,9 @@ def detect_mentions(pages: DataFrame, automaton_bc,
 
     ``automaton_bc``: a Broadcast[AhoCorasick] (build once per job —
     ``spark.sparkContext.broadcast(build_automaton(lex))``).
-    ``lang_filter`` prunes non-matching languages *before* the UDF
-    (declarative filter -> pushed to the scan when reading parquet).
+    ``lang_filter`` prunes non-matching languages *before* the UDF.
     """
-    src = pages
-    if lang_filter is not None:
-        src = src.filter(src["lang"] == lang_filter)
-    src = src.select("url", text_col)
+    src = _in_lang(pages, lang_filter).select("url", text_col)
 
     def find_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ac = automaton_bc.value
@@ -80,12 +88,7 @@ def jvm_mention_pattern(lexicon: list[dict], min_length: int = 3) -> str:
     lookarounds — Java \\b would wrongly treat '_' as a word char)."""
     import re as _re
 
-    pats = set()
-    for t in lexicon:
-        pats.add(t["label_norm"])
-        for s in t.get("synonyms", ()):
-            pats.add(local_degrade(s))
-    ordered = sorted((p for p in pats if len(p) >= min_length),
+    ordered = sorted(_patterns(lexicon, min_length),
                      key=lambda p: (-len(p), p))
     alternation = "|".join(_re.escape(p) for p in ordered)
     # (?iu) = CASE_INSENSITIVE + UNICODE_CASE: Java's bare (?i) folds
@@ -108,16 +111,13 @@ def detect_mentions_jvm(pages: DataFrame, lexicon: list[dict],
     consumes pattern_norm.  Output mentions equal the broadcast
     matcher's on the same text (equality-tested).
 
-    Measured at 200k docs / 225 patterns: ~38k docs/s vs the fused
-    Arrow path's ~43k — Java's backtracking alternation does not beat
-    CPython's sre here, so the pipeline keeps the fused path; this
-    operator is for deployments where Python workers are unavailable
-    or memory-capped (it needs none)."""
+    The triple factory runs it on the pre-extracted rows inside
+    ``detect_mentions_hybrid``; on its own it serves deployments where
+    Python workers are unavailable or memory-capped (it needs none).
+    Its cost is the benchmark's ``mentions_jvm`` layer
+    (``perfbench/run.py --workload factory --trace 1``)."""
     pattern = jvm_mention_pattern(lexicon, min_length)
-    src = pages
-    if lang_filter is not None:
-        src = src.filter(src["lang"] == lang_filter)
-    src = src.filter(F.col(text_col).isNotNull())
+    src = _in_lang(pages, lang_filter).filter(F.col(text_col).isNotNull())
     return (src.select(
         "url",
         F.explode(F.regexp_extract_all(F.col(text_col),
@@ -129,36 +129,24 @@ def detect_mentions_jvm(pages: DataFrame, lexicon: list[dict],
 def detect_mentions_hybrid(pages: DataFrame, lexicon: list[dict],
                            automaton_bc,
                            lang_filter: str | None = "en",
-                           min_length: int = 3,
-                           max_jvm_patterns: int = 20_000) -> DataFrame:
-    """Scale-optimal mention stage for the triple factory: rows whose
-    text is already extracted run the pure-JVM regexp path (whole-stage
-    codegen — A/B-measured 1.7x the Arrow path on equal text rows at
-    100k pages, identical output); rows that still need extraction run
-    the fused Python pass (extraction is Python regardless).  Falls
-    back to fused-for-everything when the alternation would exceed the
-    regex-size guard (same ~20k-pattern bound as kernel/ac.py).
-
-    Output: (url, surface, pattern_norm) — the factory consumes only
-    url + pattern_norm; use detect_mentions/_fused when the annotate
-    contract needs offsets."""
-    n_patterns = len({p for t in lexicon
-                      for p in (t["label_norm"],
-                                *map(local_degrade, t.get("synonyms", ())))})
-    if n_patterns > max_jvm_patterns:
-        return detect_mentions_fused(pages, automaton_bc,
-                                     lang_filter=lang_filter) \
-            .select("url", "surface", "pattern_norm")
-    src = pages
-    if lang_filter is not None:
-        src = src.filter(src["lang"] == lang_filter)
+                           min_length: int = 3) -> DataFrame:
+    """The triple factory's mention stage: rows whose text is already
+    extracted run the pure-JVM regexp path, rows that still need
+    extraction run the fused extract+match Arrow pass — one Python
+    stage in the plan (costs: the benchmark's ``mentions_jvm`` and
+    ``mentions_fused`` layers).  Falls back to fused-for-everything
+    past ``MAX_REGEX_PATTERNS`` patterns.  Output (url, surface,
+    pattern_norm) equals fused on (url, pattern_norm) multisets; use
+    detect_mentions/_fused when the annotate contract needs offsets."""
+    cols = ("url", "surface", "pattern_norm")
+    src = _in_lang(pages, lang_filter)
+    if len(_patterns(lexicon, min_length)) > MAX_REGEX_PATTERNS:
+        return detect_mentions_fused(src, automaton_bc,
+                                     lang_filter=None).select(*cols)
     jvm_part = detect_mentions_jvm(src, lexicon, lang_filter=None,
                                    min_length=min_length)
-    html_part = (detect_mentions_fused(
-        src.filter(F.col("text").isNull()), automaton_bc,
-        lang_filter=None)
-        .select("url", "surface", "pattern_norm"))
-    return jvm_part.unionByName(html_part)
+    return jvm_part.unionByName(
+        _fused_branch(src, automaton_bc, extract=True).select(*cols))
 
 
 def broadcast_automaton(spark: SparkSession, lexicon: list[dict],
@@ -186,37 +174,37 @@ def detect_mentions_fused(pages: DataFrame, automaton_bc,
     Output schema/content identical to ``detect_mentions`` over
     ``with_extracted_text(pages)``.
     """
+    src = _in_lang(pages, lang_filter)
+    return (_fused_branch(src, automaton_bc, False, passthrough)
+            .unionByName(_fused_branch(src, automaton_bc, True,
+                                       passthrough)))
+
+
+def _fused_branch(src: DataFrame, automaton_bc, extract: bool,
+                  passthrough: tuple[str, ...] = ()) -> DataFrame:
+    """One branch of the fused stage: rows with text match it as is
+    (html pruned at the scan); with ``extract``, rows with null text
+    extract html inside the same Python pass that matches."""
     from ..kernel.extract import html_to_text
 
-    src = pages
-    if lang_filter is not None:
-        src = src.filter(src["lang"] == lang_filter)
-    schema = MENTION_SCHEMA
-    if passthrough:
-        extra = {f.name: f.dataType.simpleString()
-                 for f in pages.schema.fields if f.name in passthrough}
-        schema = MENTION_SCHEMA + ", " + ", ".join(
-            f"{c} {extra[c]}" for c in passthrough)
+    col = "html" if extract else "text"
+    types = {f.name: f.dataType.simpleString() for f in src.schema.fields}
+    schema = ", ".join([MENTION_SCHEMA,
+                        *(f"{c} {types[c]}" for c in passthrough)])
 
-    def find_in_text(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def find(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ac = automaton_bc.value
         for pdf in batches:
-            yield _match_batch(ac, pdf, pdf["text"], passthrough)
-
-    def extract_and_find(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ac = automaton_bc.value
-        for pdf in batches:
-            texts = pdf["html"].map(
-                lambda h: None if h is None else html_to_text(bytes(h)))
+            texts = pdf[col]
+            if extract:
+                texts = texts.map(
+                    lambda h: None if h is None else html_to_text(bytes(h)))
             yield _match_batch(ac, pdf, texts, passthrough)
 
-    with_text = (src.filter(F.col("text").isNotNull())
-                 .select("url", "text", *passthrough)
-                 .mapInPandas(find_in_text, schema=schema))
-    from_html = (src.filter(F.col("text").isNull())
-                 .select("url", "html", *passthrough)
-                 .mapInPandas(extract_and_find, schema=schema))
-    return with_text.unionByName(from_html)
+    text = F.col("text")
+    return (src.filter(text.isNull() if extract else text.isNotNull())
+            .select("url", col, *passthrough)
+            .mapInPandas(find, schema=schema))
 
 
 def _match_batch(ac, pdf: pd.DataFrame, texts,

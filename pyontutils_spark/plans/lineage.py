@@ -37,8 +37,9 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators import emit, linking, mentions as mention_ops
+from ..operators import emit
 from ..operators.ordering import commutative_checksum
+from .pipeline import mention_linker
 
 LINEAGE_DIRNAME = "_lineage"
 
@@ -112,21 +113,16 @@ def run_with_lineage(spark: SparkSession, pages: DataFrame,
         groups = groups[:max_groups]
 
     triples_dir = os.path.join(out_dir, "triples")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    ac_bc = mention_ops.broadcast_automaton(spark, lexicon)
-    cands = linking.candidates_df(spark, lexicon)
+    link = mention_linker(spark, lexicon)
 
     processed = []
     for group in groups:
         gid = min(group)
         # partition pruning: the bucket filter hits the directory layout
         part = bucketed.filter(F.col("bucket").isin([int(b) for b in group]))
-        ments = mention_ops.detect_mentions_fused(part, ac_bc)
-        linked = linking.link_mentions(ments, cands).persist()
+        linked = link(part).persist()
 
-        page_tri = (emit.page_type_triples(part.select("url"))
-                    .unionByName(emit.mention_triples(linked))
-                    .distinct())
+        page_tri = emit.page_triples(part, linked).distinct()
         # bucket of a page triple = bucket of its subject page
         piri = part.select(
             emit.page_iri_col().alias("subj_piri"),
@@ -134,8 +130,9 @@ def run_with_lineage(spark: SparkSession, pages: DataFrame,
         page_tri = (page_tri
                     .join(piri, page_tri.subj == piri.subj_piri, "inner")
                     .drop("subj_piri"))
-        (page_tri.write.mode("overwrite").partitionBy("bucket")
-         .parquet(triples_dir))
+        (page_tri.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("bucket").parquet(triples_dir))
 
         ent_tri = emit.entity_triples(spark, lexicon, linked)
         ent_dir = os.path.join(out_dir, "entity_triples", f"group={gid}")

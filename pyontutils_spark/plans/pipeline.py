@@ -13,45 +13,47 @@ The Spark instantiation of the reference's build pipeline
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators import emit, linking, mentions as mention_ops
-from ..operators.extract import with_extracted_text
 
 
 @dataclass
 class TripleFactoryResult:
-    pages_with_text: DataFrame
-    mentions: DataFrame
     linked: DataFrame
     triples: DataFrame
+
+
+def mention_linker(spark: SparkSession, lexicon: list[dict],
+                   min_length: int = 3, lang_filter: str | None = "en"
+                   ) -> Callable[[DataFrame], DataFrame]:
+    """The factory's pages -> linked stage, built once per run or query:
+    the automaton broadcast and best-candidate table are made here, and
+    the returned function runs the hybrid mention stage then the
+    broadcast link join on any pages frame (the whole corpus, a bucket
+    group, a streaming micro-batch)."""
+    ac_bc = mention_ops.broadcast_automaton(spark, lexicon, min_length)
+    cands = linking.candidates_df(spark, lexicon, min_length, best_only=True)
+
+    def link(pages: DataFrame) -> DataFrame:
+        ments = mention_ops.detect_mentions_hybrid(
+            pages, lexicon, ac_bc, lang_filter=lang_filter,
+            min_length=min_length)
+        return linking.link_mentions(ments, cands)
+
+    return link
 
 
 def run_triple_factory(spark: SparkSession, pages: DataFrame,
                        lexicon: list[dict], min_length: int = 3,
                        lang_filter: str | None = "en") -> TripleFactoryResult:
-    # pages_with_text is exposed for inspection/tests; the triples DAG
-    # does NOT depend on it — the fused mention stage extracts inside the
-    # same Python pass (one Arrow round-trip instead of three).
-    withtext = with_extracted_text(pages)
-    ac_bc = mention_ops.broadcast_automaton(spark, lexicon, min_length)
-    # offset-bearing mention view (the annotate contract) — exposed for
-    # inspection/tests; lazy, so it only executes if consumed
-    ments = mention_ops.detect_mentions_fused(pages, ac_bc,
-                                              lang_filter=lang_filter)
-    # the triples DAG consumes only (url, pattern_norm): use the hybrid
-    # stage — pre-extracted rows match in pure JVM (whole-stage codegen,
-    # no Python), html rows extract+match in one fused Arrow pass
-    ments_for_link = mention_ops.detect_mentions_hybrid(
-        pages, lexicon, ac_bc, lang_filter=lang_filter,
-        min_length=min_length)
-    cands = linking.candidates_df(spark, lexicon, min_length, best_only=True)
-    linked = linking.link_mentions(ments_for_link, cands)
+    linked = mention_linker(spark, lexicon, min_length, lang_filter)(pages)
     # raw pages (url only) for the page-type triples — the extraction UDF
     # must not run for them; linked is persisted inside emit_triples.
-    triples = emit.emit_triples(spark, pages, linked, lexicon)
-    return TripleFactoryResult(withtext, ments, linked, triples)
+    return TripleFactoryResult(
+        linked, emit.emit_triples(spark, pages, linked, lexicon))
 
 
 def canonicalize_triples(triples):

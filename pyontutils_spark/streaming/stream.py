@@ -1,17 +1,19 @@
 """Structured Streaming variant of the triple factory.
 
 The reference is batch-only (SURVEY.md §2.10), but a web-scale triple
-factory ingests crawl data continuously; this module runs the SAME
-operator chain (fused extract+mention -> broadcast link -> emit) as a
-streaming query:
+factory ingests crawl data continuously; this module runs it as
+streaming queries:
 
 - ``stream_triples``: file-source stream of pages -> foreachBatch
-  emitting page-level triples with per-batch dedup; exactly-once via
-  the streaming checkpoint (committed batch ids) + idempotent parquet
-  writes keyed by batch id.
+  through the batch factory's own stage (``plans.pipeline.
+  mention_linker``: hybrid mentions -> broadcast link) and
+  ``emit.page_triples``, emitting page-level triples with per-batch
+  dedup; exactly-once via the streaming checkpoint (committed batch
+  ids) + idempotent parquet writes keyed by batch id.
 - ``mention_rate``: watermarked tumbling-window aggregation of mention
   counts by entity over ``warc_ts`` (late data handled by watermark) —
-  the canonical streaming-agg shape.
+  the canonical streaming-agg shape.  It keeps the fused mention
+  stage, the one that carries ``warc_ts`` through as a passthrough.
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import emit, linking, mentions as mention_ops
+from ..plans.pipeline import mention_linker
 from ..synth.spark_gen import PAGES_SCHEMA
 
 
@@ -41,15 +44,10 @@ def stream_triples(spark: SparkSession, input_path: str,
     a replayed batch overwrites its own ``batch=<id>`` directory.
     """
     pages = read_pages_stream(spark, input_path)
-    ac_bc = mention_ops.broadcast_automaton(spark, lexicon)
-    cands = linking.candidates_df(spark, lexicon)
+    link = mention_linker(spark, lexicon)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        ments = mention_ops.detect_mentions_fused(batch_df, ac_bc)
-        linked = linking.link_mentions(ments, cands)
-        tri = (emit.page_type_triples(batch_df.select("url"))
-               .unionByName(emit.mention_triples(linked))
-               .distinct())
+        tri = emit.page_triples(batch_df, link(batch_df)).distinct()
         (tri.write.mode("overwrite")
          .parquet(os.path.join(out_dir, f"batch={batch_id}")))
 

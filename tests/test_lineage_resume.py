@@ -68,6 +68,16 @@ def test_lineage_rows_complete_and_unique(spark, out_dir):
         assert r["checksum_sum"] >= 0 or r["triples_out"] == 0
 
 
+def test_run_leaves_session_conf_unchanged(spark, out_dir):
+    """The dynamic partition overwrite is a per-write option: the
+    session's partitionOverwriteMode is the same after a run."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "static")  # the default, whatever ran before
+    run_with_lineage(spark, pages_df_local(spark, PAGES), LEX, out_dir,
+                     n_buckets=N_BUCKETS)
+    assert spark.conf.get(key) == "static"
+
+
 def test_rerun_after_completion_is_noop(spark, out_dir):
     df = pages_df_local(spark, PAGES)
     run_with_lineage(spark, df, LEX, out_dir, n_buckets=N_BUCKETS)

@@ -7,7 +7,7 @@ partitioning must yield the identical triple set and checksum."""
 import pytest
 
 from pyontutils_spark.kernel.ids import graph_checksum, page_iri, triple_bytes
-from pyontutils_spark.operators import emit
+from pyontutils_spark.operators import emit, mentions as mention_ops
 from pyontutils_spark.operators.extract import with_extracted_text
 from pyontutils_spark.plans.pipeline import run_triple_factory
 from pyontutils_spark.synth import golden
@@ -42,25 +42,48 @@ def test_extraction_invariant_bytes(spark):
         assert r.text.encode() == want[r.url].encode(), r.url
 
 
-def test_extract_if_missing_keeps_existing(spark, result):
-    rows = result.pages_with_text.select("url", "text").collect()
+@pytest.fixture(scope="module")
+def mentions(spark):
+    """Offset-bearing mentions (the annotate contract) of the corpus."""
+    bc = mention_ops.broadcast_automaton(spark, LEX)
+    return mention_ops.detect_mentions_fused(pages_df_local(spark, PAGES), bc)
+
+
+def test_extract_if_missing_keeps_existing(spark):
+    df = pages_df_local(spark, PAGES)
+    rows = with_extracted_text(df).select("url", "text").collect()
     want = {p["url"]: p["golden_text"] for p in PAGES}
     for r in rows:
         assert r.text == want[r.url]
 
 
-def test_mentions_match_golden(result):
+def test_mentions_match_golden(mentions):
     got = {(r.url, r.start, r.end, r.pattern_norm)
-           for r in result.mentions.collect()}
+           for r in mentions.collect()}
     want = {(p["url"], s, e, pat)
             for p in PAGES if p["lang"] == "en"
             for s, e, _, pat in p["mentions"]}
     assert got == want
 
 
-def test_mention_surfaces(result):
-    for r in result.mentions.limit(50).collect():
+def test_mention_surfaces(mentions):
+    for r in mentions.limit(50).collect():
         assert r.surface.lower().strip() == r.pattern_norm
+
+
+def test_linked_plan_has_one_python_stage(spark):
+    """The factory's mention stage runs a single Arrow pass (html rows
+    only; pre-extracted rows match in the JVM): one MapInPandas node,
+    no contradictory text filter, two partitions per page partition."""
+    df = pages_df_local(spark, PAGES).repartition(4)
+    linked = run_triple_factory(spark, df, LEX).linked
+    qe = linked._jdf.queryExecution()
+    assert qe.optimizedPlan().toString().count("MapInPandas") == 1
+    executed = qe.executedPlan().toString()
+    assert executed.count("MapInPandas") == 1
+    assert not any("isnull(text" in line and "isnotnull(text" in line
+                   for line in executed.splitlines())
+    assert linked.rdd.getNumPartitions() == 2 * df.rdd.getNumPartitions()
 
 
 def test_triples_precision_recall(result):

@@ -21,7 +21,7 @@ rule (FIXTURES.md §7; natsort per ``ttlser/ttlser/serializers.py:25-26``)
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 from pyspark.sql.types import StringType
 
 from ..kernel.norm import natsort_key
@@ -107,7 +107,8 @@ def connected_components_ids(edges: DataFrame, max_iter: int = 25,
     ``localCheckpoint`` truncates lineage each round — without it the
     iterated plan grows without bound and re-executes from the source
     every round.  The convergence probe is an aggregate-only signature
-    (count + xxhash64 sum in decimal — ANSI-safe, type-agnostic).
+    (count + xxhash64 sum in decimal — ANSI-safe, type-agnostic) taken
+    by an ``Observation`` in the checkpoint's own job, not a second one.
 
     ``pre_deduped=True`` skips the initial filter+distinct when the
     caller guarantees (u != v, distinct) rows — e.g. after an injective
@@ -123,13 +124,12 @@ def connected_components_ids(edges: DataFrame, max_iter: int = 25,
     prev_sig = None
     for _ in range(max_iter):
         e = _min_neighbor_star(_symmetric(e), large=True, dedup=False)
-        e = _min_neighbor_star(_symmetric(e), large=False) \
-            .localCheckpoint(eager=True)
-        sig = (e.agg(F.count("*").alias("n"),
-                     F.sum(F.xxhash64("u", "v").cast("decimal(38,0)"))
-                     .alias("s"))
-               .collect()[0])
-        sig = (sig["n"], sig["s"])
+        obs = Observation()
+        e = _min_neighbor_star(_symmetric(e), large=False).observe(
+            obs, F.count("*").alias("n"),
+            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("s")
+        ).localCheckpoint(eager=True)
+        sig = obs.get
         if sig == prev_sig:
             break
         prev_sig = sig

@@ -4,9 +4,9 @@ The reference's triple generators are per-entity flatMaps
 (``Class._triples`` ``pyontutils/core.py:1123-1150``, combinators
 ``pyontutils/combinators.py:41-64``, ``Ont.triples``
 ``core.py:1496-1515``) accumulated into an rdflib Graph (a *set*).
-Here each generator is a declarative select/union and set semantics is
-a distinct — Catalyst's partial HashAggregate does the map-side dedup,
-so the shuffle moves only already-unique rows.
+Here each generator is a declarative select; each family dedups itself
+(map-side partial aggregation) and unions of disjoint families add none:
+only mentions use ``ilx:isAbout``, only page types type a WebPage.
 
 Page IRIs are minted JVM-side with ``sha2(url, 256)`` (same bytes as
 the kernel's ``page_iri`` — no Python in the hot path).
@@ -52,8 +52,8 @@ def mention_triples(linked: DataFrame) -> DataFrame:
 
 
 def page_triples(pages: DataFrame, linked: DataFrame) -> DataFrame:
-    """Page-level triples: page types ∪ page mentions, with no distinct
-    of its own (the caller applies one over whatever it unions in)."""
+    """Page-level triples: page types ∪ page mentions, a set because
+    each family dedups itself and the two share no predicate."""
     return (page_type_triples(pages.select("url"))
             .unionByName(mention_triples(linked)))
 
@@ -85,20 +85,21 @@ def entity_triple_rows(term: dict):
 
 def entity_triples(spark: SparkSession, lexicon: list[dict],
                    linked: DataFrame | None = None) -> DataFrame:
-    """Lexicon-derived triples, optionally restricted (left-semi join) to
-    entities actually linked somewhere in the corpus."""
+    """Lexicon-derived triples as a set (a repeated term or synonym repeats
+    rows), optionally semi-joined to the entities linked in the corpus."""
     rows = [r for t in lexicon for r in entity_triple_rows(t)]
     df = spark.createDataFrame(
         rows, schema="term_id long, " + vocab.TRIPLE_SCHEMA)
     if linked is not None:
         ids = linked.select("term_id").distinct()
         df = df.join(ids, "term_id", "left_semi")
-    return df.drop("term_id")
+    return df.drop("term_id").distinct()
 
 
 def emit_triples(spark: SparkSession, pages: DataFrame, linked: DataFrame,
                  lexicon: list[dict]) -> DataFrame:
-    """Full factory output with set semantics (union + distinct).
+    """Full factory output: page triples ∪ entity triples.  Each family
+    dedups itself; unions of disjoint families add none.
 
     ``pages`` should be the RAW pages table (url suffices — passing the
     extracted-text plan here would re-run the extraction UDF for the
@@ -112,8 +113,7 @@ def emit_triples(spark: SparkSession, pages: DataFrame, linked: DataFrame,
     else:
         linked_cached = linked.persist()
     return (page_triples(pages, linked_cached)
-            .unionByName(entity_triples(spark, lexicon, linked_cached))
-            .distinct())
+            .unionByName(entity_triples(spark, lexicon, linked_cached)))
 
 
 def check_closed_predicates(triples: DataFrame) -> int:

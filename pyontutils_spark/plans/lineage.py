@@ -122,7 +122,7 @@ def run_with_lineage(spark: SparkSession, pages: DataFrame,
         part = bucketed.filter(F.col("bucket").isin([int(b) for b in group]))
         linked = link(part).persist()
 
-        page_tri = emit.page_triples(part, linked).distinct()
+        page_tri = emit.page_triples(part, linked)
         # bucket of a page triple = bucket of its subject page
         piri = part.select(
             emit.page_iri_col().alias("subj_piri"),

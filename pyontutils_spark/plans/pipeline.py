@@ -6,7 +6,7 @@ The Spark instantiation of the reference's build pipeline
 
 - one linear DAG, no driver-side loops over data
 - all joins broadcast (lexicon/candidates are the small side)
-- set semantics via distinct (map-side partial aggregation)
+- each family dedups itself; unions of disjoint families add none
 - deterministic output independent of partitioning
 """
 

@@ -158,3 +158,29 @@ def test_canonicalized_triples_match_golden(spark, result):
         from pyontutils_spark.operators import vocab
         assert (t2, vocab.OWL_SAMEAS, t1, False) in got
         assert all(s != t2 or p == vocab.OWL_SAMEAS for s, p, o, il in got)
+
+
+def test_no_aggregate_above_family_union(result):
+    """Each triple family dedups where it is produced; their union is a
+    set by disjointness, so the optimized plan's root is the Union of
+    the three families, each topped by its own Aggregate."""
+    plan = result.triples._jdf.queryExecution().optimizedPlan()
+    assert plan.nodeName() == "Union"
+    families = [plan.children().apply(i)
+                for i in range(plan.children().size())]
+    assert [f.nodeName() for f in families] == ["Aggregate"] * 3
+
+
+def test_entity_triples_disjoint_from_page_families():
+    """No entity triple can equal a page-type or mention triple: entity
+    rows never use ilx:isAbout and never type a WebPage, for the
+    synthetic lexicon plus a term with every optional field set."""
+    from pyontutils_spark.operators import vocab
+    full = dict(LEX[7], synonyms=["syn a", "syn b"], parents=["ILX:100000"],
+                deprecated=True, replaced_by="ILX:100001")
+    rows = [r for t in LEX + [full] for r in emit.entity_triple_rows(t)]
+    assert {vocab.NIFRID_SYNONYM, vocab.RDFS_SUBCLASSOF, vocab.OWL_DEPRECATED,
+            vocab.REPLACED_BY} <= {r["pred"] for r in rows}
+    assert all(r["pred"] != vocab.IS_ABOUT for r in rows)
+    assert all((r["pred"], r["obj"]) != (vocab.RDF_TYPE, vocab.WEBPAGE_CLASS)
+               for r in rows)

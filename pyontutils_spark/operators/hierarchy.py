@@ -18,7 +18,9 @@ Reference semantics:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
+
+from ..session import scoped_conf
 
 OWL_NOTHING = "http://www.w3.org/2002/07/owl#Nothing"
 
@@ -65,11 +67,8 @@ def transitive_closure(edges: DataFrame, max_depth: int = 30,
     output; plan evidence in plans/r07/transitive_closure_*."""
     from functools import reduce
 
-    sess = edges.sparkSession
-    _aqe = "spark.sql.adaptive.enabled"
-    _old_aqe = sess.conf.get(_aqe, "true")
-    sess.conf.set(_aqe, "false")
-    try:
+    with scoped_conf(edges.sparkSession,
+                     {"spark.sql.adaptive.enabled": "false"}):
         ej = (edges.select(F.col(child).alias("node"),
                            F.col(parent).alias("nxt"))
               .repartition("node").localCheckpoint(eager=True))
@@ -95,8 +94,6 @@ def transitive_closure(edges: DataFrame, max_depth: int = 30,
                 break
             pieces.append(new)
             frontier = new
-    finally:
-        sess.conf.set(_aqe, _old_aqe)
     closure = reduce(lambda x, y: x.unionByName(y), pieces)
     return closure.select(F.col("start").alias("node"),
                           F.col("node").alias("ancestor"), "depth")
@@ -126,13 +123,10 @@ def reachability_closure(edges: DataFrame, max_rounds: int = 20,
     the CC operator dodges with explode-built edges); the conf is
     restored before returning, and the returned plan is a checkpointed
     LogicalRDD so no caller ever re-derives the broken constraints."""
-    spark = edges.sparkSession
-    ckey = "spark.sql.constraintPropagation.enabled"
-    old = spark.conf.get(ckey, "true")
-    spark.conf.set(ckey, "false")
     from functools import reduce
 
-    try:
+    with scoped_conf(edges.sparkSession,
+                     {"spark.sql.constraintPropagation.enabled": "false"}):
         first = (edges.select(F.col(child).alias("a"),
                               F.col(parent).alias("b"))
                  .filter(F.col(child) != F.col(parent))
@@ -180,8 +174,6 @@ def reachability_closure(edges: DataFrame, max_rounds: int = 20,
         # broken constraints once propagation is re-enabled
         c = (reduce(lambda x, y: x.unionByName(y), pieces)
              .localCheckpoint(eager=True))
-    finally:
-        spark.conf.set(ckey, old)
     return c.select(F.col("a").alias("node"), F.col("b").alias("ancestor"))
 
 
@@ -276,7 +268,8 @@ def topo_layers(edges: DataFrame, max_iter: int = 32,
 
     Bellman-Ford-style relaxation as DataFrame joins: start all nodes
     at 0, each round layer(child) := max(layer(parent)) + 1; layers only
-    grow, so a stable (count, sum) signature means convergence.  Rounds
+    grow, so a stable (count, sum) signature — observed in each round's
+    eager checkpoint, no second job — means convergence.  Rounds
     are bounded by the DAG's depth (<= max_iter), each round is one
     shuffle on the parent key — scales like the CC operator."""
     nodes = (edges.select(F.col(child).alias("node"))
@@ -287,6 +280,7 @@ def topo_layers(edges: DataFrame, max_iter: int = 32,
     prev_sig = None
     converged = False
     for _ in range(max_iter):
+        obs = Observation()
         upd = (edges.select(F.col(child).alias("node"),
                             F.col(parent).alias("p"))
                .join(layers.select(F.col("node").alias("p"),
@@ -297,10 +291,10 @@ def topo_layers(edges: DataFrame, max_iter: int = 32,
                   .select("node",
                           F.greatest("layer", F.coalesce("up", F.lit(0)))
                           .alias("layer"))
+                  .observe(obs, F.count("*").alias("n"),
+                           F.sum("layer").alias("s"))
                   .localCheckpoint(eager=True))
-        sig = layers.agg(F.count("*").alias("n"),
-                         F.sum("layer").alias("s")).collect()[0]
-        sig = (sig["n"], sig["s"])
+        sig = obs.get
         if sig == prev_sig:
             converged = True
             break

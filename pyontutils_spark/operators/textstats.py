@@ -120,8 +120,8 @@ def gopher_quality_flags(docs: DataFrame, id_col: str = "doc_id",
     equal-run) instead of exploding ~150 rows/doc into a corpus-wide
     (id, bigram) groupBy.  The explode shape shuffled ~100 bytes/token
     twice and spilled at the 2M-doc soak; the per-row pass measured
-    4-12x faster there (scripts/_bigram_ab.py) and keeps the quality
-    gate embarrassingly parallel at any corpus size.
+    4-12x faster there, value-equal on 200k docs (BASELINE.md), and
+    keeps the quality gate embarrassingly parallel at any corpus size.
 
     The token array is LET-BOUND once per row via
     ``transform(array(tokens), ts -> stats)[1]``: every inner
@@ -182,17 +182,10 @@ def gopher_quality_flags(docs: DataFrame, id_col: str = "doc_id",
 
 
 def _bigram_at_var(ts):
-    # like _bigram_at but over a lambda-bound array Column (see
-    # gopher_quality_flags: the let-binding keeps tokenization O(n))
+    # the i-th bigram of a lambda-bound array Column (see
+    # gopher_quality_flags: the let-binding keeps tokenization O(n));
+    # a closure factory because pyspark inspects lambda arity
     def f(i):
         return F.concat_ws(" ", F.element_at(ts, i),
                            F.element_at(ts, i + 1))
-    return f
-
-
-def _bigram_at(ts_col: str):
-    # closure factory (pyspark inspects lambda arity)
-    def f(i):
-        return F.concat_ws(" ", F.element_at(ts_col, i),
-                           F.element_at(ts_col, i + 1))
     return f

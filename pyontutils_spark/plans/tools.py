@@ -15,7 +15,8 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from ..kernel.curies import DEFAULT as DEFAULT_PREFIXES
-from ..sources.rdf import read_rdf, write_ntriples, write_turtle_string
+from ..sources.rdf import (_cull, _rows, read_rdf, write_ntriples,
+                           write_turtle_string)
 
 
 def ttlfmt(spark: SparkSession, in_path: str, out_path: str | None = None,
@@ -40,14 +41,8 @@ def ttlfmt(spark: SparkSession, in_path: str, out_path: str | None = None,
                 src = f.read()
             rows, prefixes, _base = parse_turtle_document(src, in_path)
         else:
-            triples = read_rdf(spark, in_path)
-            rows = [(r.subj, r.pred, r.obj, r.obj_is_literal,
-                     r.obj_datatype, r.obj_lang)
-                    for r in triples.collect()]
-            pm = prefix_map or DEFAULT_PREFIXES
-            prefixes = pm.cull(
-                {r[0] for r in rows} | {r[1] for r in rows}
-                | {r[2] for r in rows if not r[3]})
+            rows = _rows(read_rdf(spark, in_path))
+            prefixes = _cull(prefix_map or DEFAULT_PREFIXES, rows)
         text = serialize_nifttl(rows, prefixes)
         if out_path is not None:
             with open(out_path, "w") as f:

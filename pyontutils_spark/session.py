@@ -9,6 +9,7 @@ shuffle partition sizing) is configured here so the same code ships via
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -65,3 +66,22 @@ def get_spark(app: str = "pyontutils_spark",
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict):
+    """Set ``conf`` on ``spark`` for the ``with`` body only.  On exit,
+    also on error, every key goes back to its old value, and a key that
+    was unset before is unset again (restoring a read default with
+    ``set`` would leave a new entry behind on the shared session)."""
+    old = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

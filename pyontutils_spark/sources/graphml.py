@@ -3,20 +3,20 @@
 Reimplements the computation of the reference's ``graphml_to_ttl``
 (``pyontutils/graphml_to_ttl.py:77-110``: xpath extraction of node
 labels and edges; edge-label -> predicate map at
-``graphml_to_ttl.py:44-68``) as a whole-file mapInPandas stage using
-stdlib ElementTree — one document per file, rows out.
+``graphml_to_ttl.py:44-68``) with stdlib ElementTree, as a parse
+generator over the shared per-file stage (``sources._per_file``).
 """
 
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..kernel.ids import TEMP_NS
 from ..kernel.norm import local_degrade
+from ..operators import vocab
+from . import _per_file, _text_files
 
 _NS = {"g": "http://graphml.graphdrawing.org/xmlns"}
 
@@ -74,17 +74,8 @@ def graphml_triples(text: str, edge_predicates=None):
 
 def read_graphml(spark: SparkSession, path: str,
                  edge_predicates=None) -> DataFrame:
-    files = spark.read.text(path, wholetext=True)
+    def parse(text, _src):
+        for s, p, o, il in graphml_triples(text, edge_predicates):
+            yield s, p, o, il, None, None
 
-    def per_file(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for text in pdf["value"]:
-                for s, p, o, il in graphml_triples(text, edge_predicates):
-                    rows.append((s, p, o, il, None, None))
-            yield pd.DataFrame(rows, columns=[
-                "subj", "pred", "obj", "obj_is_literal", "obj_datatype",
-                "obj_lang"])
-
-    from ..operators import vocab
-    return files.mapInPandas(per_file, schema=vocab.TRIPLE_SCHEMA)
+    return _per_file(_text_files(spark, path), parse, vocab.TRIPLE_SCHEMA)

@@ -1,26 +1,28 @@
 """RDF sources/sinks as DataFrame operators.
 
-- ``read_ntriples``: line-format scan — parsing is a single JVM-side
-  regexp (no Python in the scan path), with a pandas-UDF fallback for
-  escaped literals.
-- ``read_turtle`` / ``read_rdfxml`` / ``read_jsonld``: document formats,
-  parsed per file by the pure kernel parsers (ttl/rdfxml/jsonld) inside
-  ``mapInPandas``.
+- ``read_ntriples`` / ``read_nquads``: line-format scans — parsing is a
+  single JVM-side regexp (no Python in the scan path), with a
+  pandas-UDF fallback for escaped literals; N-Quads adds ``src_graph``.
+- ``read_turtle`` / ``read_rdfxml`` / ``read_jsonld`` / ``read_trig`` /
+  ``read_obo``: document formats, each a pure kernel parser run by the
+  shared per-file stage (``sources._per_file``).
 - ``read_rdf``: the reference's parse-with-format-fallback
   (``ttlser/ttlser/ttlfmt.py:75,78-100``) — extension dispatch, then
   the ttlfmt try-order turtle -> json-ld -> nt -> rdf-xml.
 - ``write_ntriples``: canonical ordered NT dump (sorted via
-  operators/ordering, formatted JVM-side).
-- ``write_turtle_string``: deterministic turtle for a (small) graph —
-  canonical order computed distributively, final formatting driver-side
-  (presentation step, like the reference's single-file serializer).
-- ``read_obo``: whole-file OBO documents -> stanza triples via the pure
-  kernel parser in ``mapInPandas``.
+  operators/ordering, formatted JVM-side); ``write_nquads``: the
+  distributed, one-part-file-per-task N-Quads dump.
+- ``nifttl_per_graph``: one nifttl document per graph, rendered in
+  parallel.
+- ``write_turtle_string`` / ``write_nifttl_string`` /
+  ``write_turtle_html_string`` / ``write_rdfxml_string`` /
+  ``write_jsonld_string`` / ``write_trig_string``: text for a (small)
+  graph — one driver collect (``_rows``), then the pure kernel
+  serializer (a presentation step, like the reference's single-file
+  serializer).
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -30,6 +32,7 @@ from ..kernel.obo import parse_obo, stanza_triples
 from ..kernel.rdfio import format_turtle
 from ..operators import vocab
 from ..operators.ordering import canonical_order
+from . import _per_file, _text_files
 
 # Subject / graph position: IRI or blank node.  Blank node labels are
 # matched permissively (`_:` + non-space run; backtracking yields a
@@ -206,15 +209,29 @@ def write_nquads(triples: DataFrame, path: str,
     triples.select(line.alias("value")).write.mode("overwrite").text(path)
 
 
+_TRIPLE_COLS = ("subj", "pred", "obj", "obj_is_literal", "obj_datatype",
+                "obj_lang")
+
+
+def _rows(df: DataFrame, *extra) -> list[tuple]:
+    """The one driver collect of the small-graph writers: a tuple per
+    row in triple-column order, then the ``extra`` columns."""
+    return [tuple(r) for r in df.select(*_TRIPLE_COLS, *extra).collect()]
+
+
+def _cull(prefix_map, rows) -> dict:
+    """``prefix_map`` culled to the IRIs of ``rows`` (subjects,
+    predicates and non-literal objects)."""
+    return prefix_map.cull({r[0] for r in rows} | {r[1] for r in rows}
+                           | {r[2] for r in rows if not r[3]})
+
+
 def write_turtle_string(triples: DataFrame, prefix_map=None) -> str:
     """Deterministic turtle text for a small graph (driver-side format
     of the distributively-ordered triples) — the engine analog of
     ``OntGraph.write`` (``pyontutils/core.py:504-509``)."""
     pm = prefix_map or DEFAULT_PREFIXES
-    rows = canonical_order(triples).collect()
-    return format_turtle(
-        ((r.subj, r.pred, r.obj, r.obj_is_literal, r.obj_datatype,
-          r.obj_lang) for r in rows), pm)
+    return format_turtle(_rows(canonical_order(triples)), pm)
 
 
 def write_rdfxml_string(triples: DataFrame, prefix_map=None) -> str:
@@ -227,9 +244,7 @@ def write_rdfxml_string(triples: DataFrame, prefix_map=None) -> str:
     :func:`write_turtle_string`."""
     from ..kernel.rdfxml import serialize_rdfxml
     pm = prefix_map or DEFAULT_PREFIXES
-    rows = [(r.subj, r.pred, r.obj, r.obj_is_literal, r.obj_datatype,
-             r.obj_lang) for r in triples.collect()]
-    return serialize_rdfxml(rows, pm.prefix_to_ns
+    return serialize_rdfxml(_rows(triples), pm.prefix_to_ns
                             if hasattr(pm, "prefix_to_ns") else pm)
 
 
@@ -238,9 +253,7 @@ def write_jsonld_string(triples: DataFrame) -> str:
     write-side complement of :func:`read_jsonld` (same format-gap
     rationale and round-trip property as :func:`write_rdfxml_string`)."""
     from ..kernel.jsonld import serialize_jsonld
-    rows = [(r.subj, r.pred, r.obj, r.obj_is_literal, r.obj_datatype,
-             r.obj_lang) for r in triples.collect()]
-    return serialize_jsonld(rows)
+    return serialize_jsonld(_rows(triples))
 
 
 def write_nifttl_string(triples: DataFrame,
@@ -254,13 +267,9 @@ def write_nifttl_string(triples: DataFrame,
     emit (the source document's declarations); defaults to the engine
     prefix table culled to the graph's IRIs."""
     from ..kernel.nifttl import serialize_nifttl
-    rows = [(r.subj, r.pred, r.obj, r.obj_is_literal, r.obj_datatype,
-             r.obj_lang) for r in triples.collect()]
+    rows = _rows(triples)
     if namespaces is None:
-        pm = DEFAULT_PREFIXES
-        iris = {r[0] for r in rows} | {r[1] for r in rows} | {
-            r[2] for r in rows if not r[3]}
-        namespaces = pm.cull(iris)
+        namespaces = _cull(DEFAULT_PREFIXES, rows)
     return serialize_nifttl(rows, namespaces)
 
 
@@ -322,47 +331,19 @@ def write_turtle_html_string(triples: DataFrame, prefix_map=None,
     serialize(labels=...) kwarg (:819-824)."""
     from ..kernel.nifttl import serialize_html
 
-    rows = [(r.subj, r.pred, r.obj, r.obj_is_literal, r.obj_datatype,
-             r.obj_lang) for r in triples.collect()]
-    if prefix_map is None:
-        iris = {r[0] for r in rows} | {r[1] for r in rows} | {
-            r[2] for r in rows if not r[3]}
-        namespaces = DEFAULT_PREFIXES.cull(iris)
-    else:
-        namespaces = dict(prefix_map)
+    rows = _rows(triples)
+    namespaces = (_cull(DEFAULT_PREFIXES, rows) if prefix_map is None
+                  else dict(prefix_map))
     return serialize_html(rows, namespaces, labels=labels)
 
 
-def _per_file_source(spark: SparkSession, path: str, parse) -> DataFrame:
-    """Whole-file scan -> ``parse(text, src_path)`` per file inside
-    ``mapInPandas``.  The file is the parse unit for document formats
-    (Turtle/RDF-XML/JSON-LD carry document-level state — prefix maps,
-    xml:base, @context — so they cannot be line-split like NT): at
-    scale a corpus is many files -> many tasks; a single giant document
-    should be converted to NT/parquet first (the same constraint the
-    reference has — rdflib parses one document in one process).  BNodes
-    are skolemized per file path, so output is deterministic and
-    join-safe."""
-    files = spark.read.text(path, wholetext=True) \
-        .withColumn("_src", F.input_file_name())
-
-    def per_file(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["subj", "pred", "obj", "obj_is_literal", "obj_datatype",
-                "obj_lang"]
-        for pdf in batches:
-            rows = []
-            for text, src in zip(pdf["value"], pdf["_src"]):
-                for s, p, o, il, dt, lg in parse(text, src):
-                    rows.append((s, p, o, il, dt, lg))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(per_file, schema=vocab.TRIPLE_SCHEMA)
-
-
 def read_turtle(spark: SparkSession, path: str) -> DataFrame:
-    """Turtle files -> triple rows (kernel/ttl.py parser per file)."""
+    """Turtle files -> triple rows (kernel/ttl.py parser per file).
+    Blank nodes are skolemized per file path, so output is
+    deterministic and join-safe."""
     from ..kernel.ttl import parse_turtle
-    return _per_file_source(spark, path, parse_turtle)
+    return _per_file(_text_files(spark, path), parse_turtle,
+                     vocab.TRIPLE_SCHEMA)
 
 
 def read_turtle_with_src(spark: SparkSession, paths) -> DataFrame:
@@ -370,24 +351,15 @@ def read_turtle_with_src(spark: SparkSession, paths) -> DataFrame:
     (src_file) — the imports localizer needs to know which FILE each
     owl:imports edge came from.  ``paths``: str or list of paths."""
     from ..kernel.ttl import parse_turtle
-    files = spark.read.text(paths, wholetext=True) \
-        .withColumn("_src", F.input_file_name())
 
-    def per_file(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["src_file", "subj", "pred", "obj", "obj_is_literal",
-                "obj_datatype", "obj_lang"]
-        for pdf in batches:
-            rows = []
-            for text, src in zip(pdf["value"], pdf["_src"]):
-                # input_file_name returns a file: URI; keep plain paths
-                plain = src[7:] if src.startswith("file://") else (
-                    src[5:] if src.startswith("file:") else src)
-                for s, p, o, il, dt, lg in parse_turtle(text, src):
-                    rows.append((plain, s, p, o, il, dt, lg))
-            yield pd.DataFrame(rows, columns=cols)
+    def parse(text, src):
+        # input_file_name returns a file: URI; keep plain paths
+        plain = src[7:] if src.startswith("file://") else (
+            src[5:] if src.startswith("file:") else src)
+        return ((plain, *row) for row in parse_turtle(text, src))
 
-    return files.mapInPandas(
-        per_file, schema="src_file string, " + vocab.TRIPLE_SCHEMA)
+    return _per_file(_text_files(spark, paths), parse,
+                     "src_file string, " + vocab.TRIPLE_SCHEMA)
 
 
 def read_ontology_headers(spark: SparkSession, path: str) -> DataFrame:
@@ -397,13 +369,15 @@ def read_ontology_headers(spark: SparkSession, path: str) -> DataFrame:
     ``core.py:298-379``; the Spark analog bounds the parse — body
     bytes are never tokenized)."""
     from ..kernel.ttl import parse_turtle_header
-    return _per_file_source(spark, path, parse_turtle_header)
+    return _per_file(_text_files(spark, path), parse_turtle_header,
+                     vocab.TRIPLE_SCHEMA)
 
 
 def read_rdfxml(spark: SparkSession, path: str) -> DataFrame:
     """RDF/XML files -> triple rows (kernel/rdfxml.py per file)."""
     from ..kernel.rdfxml import parse_rdfxml
-    return _per_file_source(spark, path, parse_rdfxml)
+    return _per_file(_text_files(spark, path), parse_rdfxml,
+                     vocab.TRIPLE_SCHEMA)
 
 
 def read_trig(spark: SparkSession, path: str) -> DataFrame:
@@ -414,21 +388,8 @@ def read_trig(spark: SparkSession, path: str) -> DataFrame:
     the parse unit (kernel/trig.py per file); every Turtle file is
     also a valid TriG file and parses to all-NULL ``src_graph``."""
     from ..kernel.trig import parse_trig
-    files = spark.read.text(path, wholetext=True) \
-        .withColumn("_src", F.input_file_name())
-
-    def per_file(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernel.trig import parse_trig
-        cols = ["subj", "pred", "obj", "obj_is_literal", "obj_datatype",
-                "obj_lang", "src_graph"]
-        for pdf in batches:
-            rows = []
-            for text, src in zip(pdf["value"], pdf["_src"]):
-                rows.extend(parse_trig(text, src))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(
-        per_file, schema=vocab.TRIPLE_SCHEMA + ", src_graph string")
+    return _per_file(_text_files(spark, path), parse_trig,
+                     vocab.TRIPLE_SCHEMA + ", src_graph string")
 
 
 def write_trig_string(triples: DataFrame, prefix_map=None,
@@ -439,18 +400,16 @@ def write_trig_string(triples: DataFrame, prefix_map=None,
     named-graph dump shape is :func:`write_nquads`).  ``graph_col``
     (nullable, optional) supplies the named graph per row."""
     from ..kernel.trig import serialize_trig
-    has_g = graph_col in triples.columns
-    rows = [(r.subj, r.pred, r.obj, r.obj_is_literal, r.obj_datatype,
-             r.obj_lang, getattr(r, graph_col) if has_g else None)
-            for r in triples.collect()]
+    graph = graph_col if graph_col in triples.columns else F.lit(None)
     pm = prefix_map or DEFAULT_PREFIXES
-    return serialize_trig(rows, pm)
+    return serialize_trig(_rows(triples, graph), pm)
 
 
 def read_jsonld(spark: SparkSession, path: str) -> DataFrame:
     """JSON-LD files -> triple rows (kernel/jsonld.py per file)."""
     from ..kernel.jsonld import parse_jsonld
-    return _per_file_source(spark, path, parse_jsonld)
+    return _per_file(_text_files(spark, path), parse_jsonld,
+                     vocab.TRIPLE_SCHEMA)
 
 
 def read_rdf(spark: SparkSession, path: str,
@@ -505,20 +464,12 @@ def read_obo(spark: SparkSession, path: str) -> DataFrame:
     triples, parsed per file."""
     from ..kernel.obo import header_triples
 
-    files = spark.read.text(path, wholetext=True)
+    def parse(text, _src):
+        doc = parse_obo(text)
+        for s, p, o, is_lit in header_triples(doc["header"]):
+            yield s, p, o, is_lit, None, None
+        for stanza in doc["stanzas"]:
+            for s, p, o, is_lit in stanza_triples(stanza):
+                yield s, p, o, is_lit, None, None
 
-    def per_file(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for text in pdf["value"]:
-                doc = parse_obo(text)
-                for s, p, o, is_lit in header_triples(doc["header"]):
-                    rows.append((s, p, o, is_lit, None, None))
-                for stanza in doc["stanzas"]:
-                    for s, p, o, is_lit in stanza_triples(stanza):
-                        rows.append((s, p, o, is_lit, None, None))
-            yield pd.DataFrame(rows, columns=[
-                "subj", "pred", "obj", "obj_is_literal", "obj_datatype",
-                "obj_lang"])
-
-    return files.mapInPandas(per_file, schema=vocab.TRIPLE_SCHEMA)
+    return _per_file(_text_files(spark, path), parse, vocab.TRIPLE_SCHEMA)

@@ -1,22 +1,20 @@
 """Sitemap source: sitemap files/globs -> a crawl-frontier DataFrame.
 
-File-level parallelism (``binaryFile`` scan + the pure kernel parser in
-``mapInPandas``), the same per-file contract as the WARC and RDF
-sources — a crawl's sitemap set is ~10^5-10^6 files, so one task per
-file IS the corpus parallelism.  Index documents contribute
-``is_index_ref = true`` rows (their child sitemap locations) instead of
-being fetched: this engine has no network; the orchestrator resolves
-refs to paths and feeds them back in.
+The pure kernel parser over a ``binaryFile`` scan, run by the shared
+per-file stage (``sources._per_file``) — a crawl's sitemap set is
+~10^5-10^6 files, so one task per file IS the corpus parallelism.
+Index documents contribute ``is_index_ref = true`` rows (their child
+sitemap locations) instead of being fetched: this engine has no
+network; the orchestrator resolves refs to paths and feeds them back
+in.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..kernel.sitemap import parse_sitemap
+from . import _binary_files, _per_file
 
 SITEMAP_SCHEMA = ("loc string, lastmod string, changefreq string, "
                   "priority double, is_index_ref boolean, "
@@ -26,30 +24,11 @@ SITEMAP_SCHEMA = ("loc string, lastmod string, changefreq string, "
 def read_sitemap(spark: SparkSession, path: str) -> DataFrame:
     """Sitemap file(s)/glob -> (loc, lastmod, changefreq, priority,
     is_index_ref, src_file) rows; gzip and text sitemaps included."""
-    files = spark.read.format("binaryFile").load(path)
+    def parse(content, src):
+        doc = parse_sitemap(bytes(content))
+        for loc, lastmod, changefreq, prio in doc.urls:
+            yield loc, lastmod, changefreq, prio, False, src
+        for loc, lastmod in doc.children:
+            yield loc, lastmod, None, None, True, src
 
-    def per_file(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("loc", "lastmod", "changefreq",
-                                    "priority", "is_index_ref",
-                                    "src_file")}
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                doc = parse_sitemap(bytes(content))
-                for loc, lastmod, changefreq, prio in doc.urls:
-                    rows["loc"].append(loc)
-                    rows["lastmod"].append(lastmod)
-                    rows["changefreq"].append(changefreq)
-                    rows["priority"].append(prio)
-                    rows["is_index_ref"].append(False)
-                    rows["src_file"].append(fpath)
-                for loc, lastmod in doc.children:
-                    rows["loc"].append(loc)
-                    rows["lastmod"].append(lastmod)
-                    rows["changefreq"].append(None)
-                    rows["priority"].append(None)
-                    rows["is_index_ref"].append(True)
-                    rows["src_file"].append(fpath)
-            yield pd.DataFrame(rows)
-
-    return (files.select("path", "content")
-            .mapInPandas(per_file, schema=SITEMAP_SCHEMA))
+    return _per_file(_binary_files(spark, path), parse, SITEMAP_SCHEMA)

@@ -1,49 +1,35 @@
 """WARC ingest: Common Crawl's container format -> the BASELINE pages
 table shape ``(url, warc_ts, html, text, lang)``.
 
-One Spark task per WARC file (`binaryFile` scan + the pure-stdlib
-kernel parser in ``mapInPandas``) — CC segments are ~1 GB each and a
-crawl is ~10^5 files, so file-level parallelism IS the corpus
-parallelism, the same per-file contract as the RDF document sources.
-``text``/``lang`` come back NULL: extraction and language-ID are the
-next pipeline stages (``plans/pipeline.run_triple_factory`` extracts
-for rows with NULL text; ``textstats.lang_id_col`` fills lang).
+The pure-stdlib kernel parser over a ``binaryFile`` scan, run by the
+shared per-file stage (``sources._per_file``) — CC segments are ~1 GB
+each and a crawl is ~10^5 files, so one task per file IS the corpus
+parallelism.  ``text``/``lang`` come back NULL: extraction and
+language-ID are the next pipeline stages
+(``plans/pipeline.run_triple_factory`` extracts for rows with NULL
+text; ``textstats.lang_id_col`` fills lang).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..kernel.warc import parse_warc
 from ..synth.spark_gen import PAGES_SCHEMA
+from . import _binary_files, _per_file
 
 
 def read_warc(spark: SparkSession, path: str,
               min_status: int = 200, max_status: int = 299) -> DataFrame:
     """WARC file(s)/glob -> pages rows; only ``response`` records with
     a 2xx (or absent) HTTP status survive, the CC-pipeline default."""
-    files = spark.read.format("binaryFile").load(path)
+    def parse(content, _src):
+        for r in parse_warc(bytes(content)):
+            if r["url"] is None:
+                continue
+            if r["status"] is not None and not (
+                    min_status <= r["status"] <= max_status):
+                continue
+            yield r["url"], r["ts"], r["html"], None, None
 
-    def per_file(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"url": [], "warc_ts": [], "html": [],
-                    "text": [], "lang": []}
-            for content in pdf["content"]:
-                for r in parse_warc(bytes(content)):
-                    if r["url"] is None:
-                        continue
-                    if r["status"] is not None and not (
-                            min_status <= r["status"] <= max_status):
-                        continue
-                    rows["url"].append(r["url"])
-                    rows["warc_ts"].append(r["ts"])
-                    rows["html"].append(r["html"])
-                    rows["text"].append(None)
-                    rows["lang"].append(None)
-            yield pd.DataFrame(rows)
-
-    return (files.select("content")
-            .mapInPandas(per_file, schema=PAGES_SCHEMA))
+    return _per_file(_binary_files(spark, path), parse, PAGES_SCHEMA)

@@ -269,14 +269,55 @@ def test_topo_layers_cycle_raises(spark):
         topo_layers(df, max_iter=6)
 
 
+# Jobs the 6-edge chain below ran when each round probed convergence
+# with a separate aggregate collect after its eager checkpoint (local[4],
+# 4 shuffle partitions, AQE on).
+TOPO_JOBS_WITH_SEPARATE_PROBE = 66
+
+
 def test_topo_layers_deep_chain_converges(spark):
     """A chain exactly at depth max_iter-1 still converges (the
-    convergence probe needs one extra stable round)."""
+    convergence probe needs one extra stable round), and the probe is
+    observed in each round's eager checkpoint, not run as its own job."""
     from pyontutils_spark.operators.hierarchy import topo_layers
+    sc = spark.sparkContext
     chain = [(f"n{i+1}", f"n{i}") for i in range(6)]
     df = spark.createDataFrame(chain, "child string, parent string")
-    got = {r.node: r.layer for r in topo_layers(df, max_iter=8).collect()}
+    sc.setJobGroup("topo_chain", "topo chain")
+    try:
+        got = {r.node: r.layer
+               for r in topo_layers(df, max_iter=8).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     assert got == {f"n{i}": i for i in range(7)}
+    jobs = sc.statusTracker().getJobIdsForGroup("topo_chain")
+    assert 0 < len(jobs) < TOPO_JOBS_WITH_SEPARATE_PROBE
+
+
+def test_closures_leave_session_conf_unchanged(spark):
+    """Both closures switch a conf off for their loop only: afterwards,
+    also after reachability_closure raises, the session conf is exactly
+    as before — a key that was unset stays unset."""
+    from pyontutils_spark.operators.hierarchy import reachability_closure
+    keys = ("spark.sql.adaptive.enabled",
+            "spark.sql.constraintPropagation.enabled")
+    orig = {k: spark.conf.get(k, None) for k in keys}
+    for k in keys:  # the session is shared: start from "unset"
+        spark.conf.unset(k)
+    try:
+        before = dict(spark.conf.getAll)
+        chain = spark.createDataFrame(
+            [(f"c{i}", f"c{i+1}") for i in range(8)],
+            "child string, parent string")
+        assert transitive_closure(chain).count() == 8 * 9 // 2
+        assert reachability_closure(chain).count() == 8 * 9 // 2
+        with pytest.raises(ValueError, match="did not converge"):
+            reachability_closure(chain, max_rounds=1)
+        assert dict(spark.conf.getAll) == before
+    finally:
+        for k, v in orig.items():
+            if v is not None:
+                spark.conf.set(k, v)
 
 
 def test_materialize_inverses(spark):

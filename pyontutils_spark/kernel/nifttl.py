@@ -13,7 +13,7 @@ Core algorithm pieces (all pure Python, driver-side per graph — ontology
 files are driver-scale; bulk triple output uses the distributed
 N-Triples/catalog paths):
 
-- ``natsort`` digit-run natural sort (``serializers.py:25-26``).
+- ``natsort_tuple`` digit-run natural sort (``serializers.py:25-26``).
 - rdflib-equivalent literal *normalization* at graph build (the golden
   file shows ``1e0`` -> ``1e+00``, ``-00`` zone -> ``+00:00`` isoformat,
   ``Decimal`` lexical preserved) and *litsort* typed literal ordering
@@ -42,6 +42,8 @@ from decimal import Decimal, InvalidOperation
 from datetime import datetime, timedelta, timezone
 from unicodedata import category
 import re
+
+from .norm import natsort_tuple
 
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 RDFS_NS = "http://www.w3.org/2000/01/rdf-schema#"
@@ -154,15 +156,6 @@ SYMMETRIC_PREDICATES = (OWL_NS + "disjointWith",)
 VERSION_COMMENT = ("### Serialized using the pyontutils_spark "
                    "deterministic serializer v1.2.0")
 
-_DIGITS = re.compile(r"([0-9]+)")
-
-
-def natsort(s: str):
-    """serializers.py:25-26 — digit runs as ints, rest lowercased."""
-    return tuple(int(t) if t.isdigit() else t.lower()
-                 for t in _DIGITS.split(s))
-
-
 # ---------------------------------------------------------------------------
 # literal normalization + ordering
 # ---------------------------------------------------------------------------
@@ -248,7 +241,7 @@ def normalize_literal(lex: str, dt, lang):
     return lex, dt, lang
 
 
-def litsort_key(term, sortkey=natsort):
+def litsort_key(term, sortkey=natsort_tuple):
     """serializers.py:28-52 make_litsort: (0 bool) < (1 numeric) <
     (2 datetime, naive first) < (3 sortkey/datatype/lang)."""
     _, lex, dt, lang = term
@@ -515,7 +508,7 @@ class NifTtlSerializer:
     #: knobs the reference's serializer family overrides
     #: (DeterministicTurtleSerializer sets [] and identity)
     PRED_ORDER = PREDICATE_ORDER
-    sortkey = staticmethod(natsort)
+    sortkey = staticmethod(natsort_tuple)
 
     def __init__(self, rows, namespaces: dict[str, str],
                  is_bnode=None):

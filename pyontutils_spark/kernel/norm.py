@@ -19,6 +19,7 @@ from __future__ import annotations
 import keyword
 import re
 from datetime import datetime
+from decimal import Decimal
 
 _DIGIT_RUN = re.compile(r"([0-9]+)")
 
@@ -101,10 +102,16 @@ _DT_DT = {XSD + "dateTime", XSD + "date"}
 _NUM_OFFSET = 10 ** 14  # numeric encoding window: |value| < 1e14
 
 
-def _num_key(v: float) -> str:
+def _num_key(lex: str) -> str:
     """Fixed-width string whose lexicographic order equals numeric order
-    for |v| < 1e14 with 9 fractional digits."""
-    return f"{v + _NUM_OFFSET:025.9f}"
+    for |v| < 1e14 with 9 fractional digits.  The sum with the offset is
+    done in Decimal: as a float it keeps only 2^-6 steps, which put 0.02
+    before 1e-2.  Values outside the window keep the float form, which
+    stays short for huge exponents."""
+    v = Decimal(lex)
+    if v.is_finite() and abs(v) < _NUM_OFFSET:
+        return f"{v + _NUM_OFFSET:025.9f}"
+    return f"{float(lex) + _NUM_OFFSET:025.9f}"
 
 
 def litsort_tuple(lex: str, datatype: str | None = None,
@@ -139,8 +146,8 @@ def litsort_key(lex: str, datatype: str | None = None,
         return "0" + v
     if datatype in _NUMERIC_DT:
         try:
-            return "1" + _num_key(float(lex)) + "\x01" + lex
-        except ValueError:
+            return "1" + _num_key(lex) + "\x01" + lex
+        except (ValueError, ArithmeticError):
             pass
     if datatype in _DT_DT:
         has_tz = lex.endswith("Z") or ("+" in lex[10:]) or ("-" in lex[11:])

@@ -1,5 +1,5 @@
-"""Entity canonicalization: sameAs candidates -> connected components ->
-canonical IRI -> triple rewrite + owl:sameAs provenance.
+"""Entity canonicalization: sameAs edges or shared labels -> connected
+components -> canonical IRI -> triple rewrite + owl:sameAs provenance.
 
 Mirrors the reference's synonym/label collapsing: duplicate normalized
 labels form candidate groups (``get_label2rows`` multimap,
@@ -7,6 +7,11 @@ labels form candidate groups (``get_label2rows`` multimap,
 map applied to every triple position with an ``owl:sameAs`` provenance
 triple emitted per replacement (``swapUriSwitch``/``switchURIs``,
 ``pyontutils/ontutils.py:521-583, 71-91``).
+
+Label groups reach the components through a ``min`` aggregate: each
+(iri, label) row's composite id is joined to its label's min id, and
+those star edges go straight into the rounds.  No window sorts a label
+group, so a label shared by 10^6 IRIs is one partial min per map task.
 
 The component computation is the alternating large-star/small-star
 iteration (hash-partitioned equi-joins; converges in O(log n) rounds on
@@ -21,7 +26,7 @@ rule (FIXTURES.md §7; natsort per ``ttlser/ttlser/serializers.py:25-26``)
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, Window, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.sql.types import StringType
 
 from ..kernel.norm import natsort_key
@@ -153,7 +158,19 @@ _NK_SEP = "\x00"
 
 
 def _natsort_id(col: str):
-    return F.concat(natsort_key_udf(col), F.lit(_NK_SEP), F.col(col))
+    """Composite id of a non-null IRI column.  Never null (concat_ws), so
+    a later ``u != v`` makes Spark infer no not-null filter, which it
+    would push, with a Python pass, down into the input's scan."""
+    return F.concat_ws(_NK_SEP, natsort_key_udf(col), F.col(col))
+
+
+def _components_by_iri(ids: DataFrame, pre_deduped: bool) -> DataFrame:
+    """CC over composite-id edges (u, v) -> (iri, canonical_iri), split
+    back out of the ids."""
+    comp = connected_components_ids(ids, pre_deduped=pre_deduped)
+    return comp.select(
+        F.substring_index("node", _NK_SEP, -1).alias("iri"),
+        F.substring_index("component", _NK_SEP, -1).alias("canonical_iri"))
 
 
 def canonical_mapping(sameas_edges: DataFrame,
@@ -175,26 +192,22 @@ def canonical_mapping(sameas_edges: DataFrame,
     raw = (sameas_edges.select(F.col(a_col).alias("_ra"),
                                F.col(b_col).alias("_rb"))
            .filter(F.col("_ra") != F.col("_rb")).distinct())
-    e = raw.select(_natsort_id("_ra").alias("u"),
-                   _natsort_id("_rb").alias("v"))
-    comp = connected_components_ids(e, pre_deduped=True)
-    return comp.select(
-        F.substring_index("node", _NK_SEP, -1).alias("iri"),
-        F.substring_index("component", _NK_SEP, -1).alias("canonical_iri"))
+    return _components_by_iri(
+        raw.select(_natsort_id("_ra").alias("u"),
+                   _natsort_id("_rb").alias("v")), pre_deduped=True)
 
 
-def sameas_candidates_from_lexicon(entity_labels: DataFrame) -> DataFrame:
-    """entity_labels(iri, label_norm) -> candidate edges (a, b): every
-    member of a shared-label group paired with the group's first member
-    (star shape — linear in group size, same components as all-pairs).
-    get_label2rows semantics (interlex_sql.py:271-282)."""
-    w = Window.partitionBy("label_norm").orderBy(natsort_key_udf("iri"), "iri")
-    ranked = entity_labels.withColumn("rn", F.row_number().over(w))
-    firsts = (ranked.filter("rn = 1")
-              .select("label_norm", F.col("iri").alias("a")))
-    rest = (ranked.filter("rn > 1")
-            .select("label_norm", F.col("iri").alias("b")))
-    return rest.join(firsts, "label_norm").select("a", "b")
+def canonical_mapping_from_labels(entity_labels: DataFrame) -> DataFrame:
+    """entity_labels(iri, label_norm) -> (iri, canonical_iri) for every
+    IRI that shares a normalized label with another, transitively;
+    canonical = natsort-min member.  The group min's own ``u == v`` edge
+    and the repeat edge of an IRI whose labels share a min are dropped
+    by the component input's dedup; a label of one IRI yields no row."""
+    ids = (entity_labels.filter(F.col("iri").isNotNull())
+           .select("label_norm", _natsort_id("iri").alias("u")))
+    mins = ids.groupBy("label_norm").agg(F.min("u").alias("v"))
+    return _components_by_iri(ids.join(mins, "label_norm").select("u", "v"),
+                              pre_deduped=False)
 
 
 def rewrite_triples(triples: DataFrame, mapping: DataFrame,

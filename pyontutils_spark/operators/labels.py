@@ -14,11 +14,9 @@ intrin)`` == ``ms(intrin, inter)``).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import StringType
 
-from ..kernel.norm import natsort_key
+from .components import natsort_key_udf
 
 # category -> render order (smaller renders first); suffix category last
 DEFAULT_CATEGORY_ORDER = {
@@ -28,11 +26,6 @@ DEFAULT_CATEGORY_ORDER = {
     "morphology": 3,
     "role": 9,  # suffix category
 }
-
-
-@F.pandas_udf(StringType())
-def _natkey_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda x: None if x is None else natsort_key(x))
 
 
 def synthesize_labels(props: DataFrame,
@@ -54,7 +47,7 @@ def synthesize_labels(props: DataFrame,
         "iri",
         F.struct(
             F.coalesce(rank[F.col("category")], F.lit(5)).alias("crank"),
-            _natkey_udf("value").alias("nkey"),
+            natsort_key_udf("value").alias("nkey"),
             rendered.alias("shown")).alias("item"))
     return (tagged.groupBy("iri")
             .agg(F.array_join(

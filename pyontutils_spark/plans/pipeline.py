@@ -57,9 +57,10 @@ def run_triple_factory(spark: SparkSession, pages: DataFrame,
 
 
 def canonicalize_triples(triples):
-    """Entity-canonicalization pass over factory output: sameAs candidate
-    edges from duplicate rdfs:label values, connected components, rewrite
-    every triple through (iri -> natsort-min canonical), emit owl:sameAs
+    """Entity-canonicalization pass over factory output: duplicate
+    rdfs:label values group entities, each group's natsort-min member
+    is its canonical IRI (through connected components), and every
+    triple is rewritten through (iri -> canonical) with owl:sameAs
     provenance — the reference's synonym/label collapsing
     (get_label2rows interlex_sql.py:271-282 + switchURIs/swapUriSwitch
     ontutils.py:71-91, 521-583) as one declarative pass."""
@@ -67,12 +68,10 @@ def canonicalize_triples(triples):
 
     from ..operators import vocab
     from ..operators.components import (
-        canonical_mapping, rewrite_triples, sameas_candidates_from_lexicon)
+        canonical_mapping_from_labels, rewrite_triples)
 
     labels = (triples.filter(F.col("pred") == vocab.RDFS_LABEL)
               .select(F.col("subj").alias("iri"),
                       F.lower(F.trim("obj")).alias("label_norm"))
               .distinct())
-    edges = sameas_candidates_from_lexicon(labels)
-    mapping = canonical_mapping(edges)
-    return rewrite_triples(triples, mapping)
+    return rewrite_triples(triples, canonical_mapping_from_labels(labels))

@@ -28,13 +28,18 @@ def get_spark(app: str = "pyontutils_spark",
     # stage).  Parameterised: SPARK_GRAFT_LOCAL_DIR overrides; default
     # to tmpfs when present (measured ~10% on shuffle-heavy graph
     # iteration plus far lower variance), else leave Spark's default.
-    # Cluster managers (YARN/K8s) override spark.local.dir themselves,
-    # so this only shapes local/standalone runs.
+    # Spark itself prefers SPARK_LOCAL_DIRS over spark.local.dir, so
+    # when that is set there is no default, and the dirs it names are
+    # the ones the compression choice below looks at.  Cluster managers
+    # (YARN/K8s) override spark.local.dir themselves, so this only
+    # shapes local/standalone runs.
+    env_dirs = os.environ.get("SPARK_LOCAL_DIRS")
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if local_dir is None and os.path.isdir("/dev/shm"):
+    if local_dir is None and not env_dirs and os.path.isdir("/dev/shm"):
         local_dir = "/dev/shm/spark-graft-local"
     if local_dir:
         os.makedirs(local_dir, exist_ok=True)
+    scratch = (env_dirs or local_dir or "").split(",")
     b = (SparkSession.builder
          .master(f"local[{cores}]")
          .appName(app)
@@ -49,18 +54,17 @@ def get_spark(app: str = "pyontutils_spark",
          .config("spark.sql.files.maxPartitionBytes", "134217728"))
     if local_dir:
         b = b.config("spark.local.dir", local_dir)
-        # Compression is tied to the shuffle MEDIUM, not hardcoded:
-        # with scratch on tmpfs the bytes never touch a disk or NIC in
-        # local mode, so lz4 is pure CPU overhead (measured ~16% on the
-        # shuffle-heavy closure loops).  On clusters the manager sets
-        # spark.local.dir itself, this branch never fires, and Spark's
-        # compressed default stands.  SPARK_GRAFT_SHUFFLE_COMPRESS=true
-        # forces compression back on even for tmpfs.
-        if (local_dir.startswith("/dev/shm")
-                and os.environ.get("SPARK_GRAFT_SHUFFLE_COMPRESS",
-                                   "").lower() != "true"):
-            b = (b.config("spark.shuffle.compress", "false")
-                 .config("spark.shuffle.spill.compress", "false"))
+    # Compression is tied to the shuffle MEDIUM, not hardcoded: with
+    # scratch on tmpfs the bytes never touch a disk or NIC in local
+    # mode, so lz4 is pure CPU overhead (measured ~16% on the
+    # shuffle-heavy closure loops).  On disk, and on clusters, Spark's
+    # compressed default stands.  SPARK_GRAFT_SHUFFLE_COMPRESS=true
+    # forces compression back on even for tmpfs.
+    if (all(d.startswith("/dev/shm") for d in scratch)
+            and os.environ.get("SPARK_GRAFT_SHUFFLE_COMPRESS",
+                               "").lower() != "true"):
+        b = (b.config("spark.shuffle.compress", "false")
+             .config("spark.shuffle.spill.compress", "false"))
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

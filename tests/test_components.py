@@ -1,5 +1,5 @@
 """Canonicalization: large-star/small-star CC vs planted components
-(FIXTURES.md §7), sameAs candidate edges from duplicate labels
+(FIXTURES.md §7), canonical IRIs from duplicate-label groups
 (get_label2rows semantics), and triple rewrite with owl:sameAs
 provenance (switchURIs/swapUriSwitch semantics)."""
 
@@ -8,8 +8,8 @@ from pyspark.sql import functions as F
 
 from pyontutils_spark.operators import vocab
 from pyontutils_spark.operators.components import (
-    canonical_mapping, connected_components_ids, rewrite_triples,
-    sameas_candidates_from_lexicon)
+    canonical_mapping, canonical_mapping_from_labels,
+    connected_components_ids, rewrite_triples)
 from pyontutils_spark.synth.sameas import make_sameas_fixture
 
 
@@ -45,17 +45,63 @@ def test_canonical_is_natsort_min(spark, fixture):
         "http://uri.interlex.org/temp/uris/ent_x2"
 
 
-def test_sameas_candidates_from_duplicate_labels(spark):
-    rows = [("http://x.example/b", "cortex"),
-            ("http://x.example/a", "cortex"),
-            ("http://x.example/c", "cortex"),
-            ("http://x.example/d", "unique label")]
-    df = spark.createDataFrame(rows, "iri string, label_norm string")
-    edges = sameas_candidates_from_lexicon(df).collect()
-    # star to the natsort-first member 'a'; unique labels produce no edge
-    assert {(r.a, r.b) for r in edges} == {
-        ("http://x.example/a", "http://x.example/b"),
-        ("http://x.example/a", "http://x.example/c")}
+X = "http://x.example/"
+
+
+@pytest.mark.parametrize("rows,want", [
+    # star to the natsort-first member 'a'; a unique label gives no row
+    ([("b", "cortex"), ("a", "cortex"), ("c", "cortex"),
+      ("d", "unique label")],
+     {"a": "a", "b": "a", "c": "a"}),
+    # natsort trap: x2 < x10 although "x10" < "x2" as strings
+    ([("x10", "hippocampus"), ("x2", "hippocampus")],
+     {"x2": "x2", "x10": "x2"}),
+    # 'm' carries two labels and bridges their groups into one component
+    ([("p", "left"), ("m", "left"), ("m", "right"), ("n", "right"),
+      ("z", "alone")],
+     {"m": "m", "n": "m", "p": "m"}),
+], ids=["star", "natsort_trap", "bridge"])
+def test_canonical_mapping_from_labels(spark, rows, want):
+    df = spark.createDataFrame([(X + i, lab) for i, lab in rows],
+                               "iri string, label_norm string")
+    got = {r.iri: r.canonical_iri
+           for r in canonical_mapping_from_labels(df).collect()}
+    assert got == {X + k: X + v for k, v in want.items()}
+
+
+# Jobs ``canonicalize_triples`` ran on the fixture below when its
+# candidate edges came from a natsort-ordered window and a self-join,
+# followed by a second natsort-id pass (local[4], 4 shuffle partitions,
+# AQE on).
+JOBS_WITH_WINDOW_CANDIDATES = 28
+
+
+def test_canonicalize_groups_label_variants_in_few_jobs(spark):
+    """Case and whitespace variants of a label group together (x2 is
+    the natsort-min of the three 'cortex' spellings), and the whole
+    pass runs fewer jobs than the window-based candidate edges did."""
+    from pyontutils_spark.plans.pipeline import canonicalize_triples
+    sc = spark.sparkContext
+    labels = [("x10", "cortex"), ("x2", " Cortex "), ("x9", "CORTEX"),
+              ("y1", "thalamus"), ("y2", "Thalamus"), ("z", "pons")]
+    triples = spark.createDataFrame(
+        [(X + i, vocab.RDFS_LABEL, lab, True, None, None)
+         for i, lab in labels]
+        + [(X + "page", "http://p/about", X + i, False, None, None)
+           for i, _ in labels],
+        vocab.TRIPLE_SCHEMA)
+    sc.setJobGroup("canonicalize", "canonicalize")
+    try:
+        got = canonicalize_triples(triples).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert {(r.subj, r.obj) for r in got
+            if r.pred == vocab.OWL_SAMEAS} == {
+        (X + "x9", X + "x2"), (X + "x10", X + "x2"), (X + "y2", X + "y1")}
+    assert {r.obj for r in got if r.pred == "http://p/about"} == {
+        X + "x2", X + "y1", X + "z"}
+    jobs = sc.statusTracker().getJobIdsForGroup("canonicalize")
+    assert 0 < len(jobs) < JOBS_WITH_WINDOW_CANDIDATES
 
 
 def test_rewrite_triples_and_provenance(spark):

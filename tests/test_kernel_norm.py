@@ -76,6 +76,11 @@ def test_litsort_key_matches_tuple_order_random():
     vals = [(str(rnd.randint(-999, 999)), XSD + "integer", None)
             for _ in range(50)]
     vals += [("word%d" % rnd.randint(0, 99), None, None) for _ in range(50)]
+    # fractions closer than the 2^-6 steps of a float sum with 1e14
+    vals += [(lex, XSD + "decimal", None)
+             for lex in ("0.02", "1e-2", "-1.0", "-0.99451")]
+    vals += [("%.*f" % (rnd.randint(1, 9), rnd.uniform(-2, 2)),
+              XSD + "decimal", None) for _ in range(200)]
     by_tuple = sorted(vals, key=lambda v: litsort_tuple(*v))
     by_key = sorted(vals, key=lambda v: litsort_key(*v))
     assert by_tuple == by_key

@@ -1266,24 +1266,19 @@ def _q_canonical_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     subject rank, curated predicate rank, global object rank (literals
     before IRIs, natsort within).  Fixture uses one namespace with
     zero-padded locals so the oracle can rank lexicographically.  The
-    single-partition window is fixture-scale only — the production
-    path is the range-partitioned orderBy in canonical_order."""
+    positions come from a single-partition ``row_number`` window over
+    the production sort (``ranked_triples`` + ``ORDER_KEYS``, the ones
+    canonical_order uses); fixture-scale only."""
     from pyspark.sql import Window
 
     from pyontutils_spark.operators.ordering import (
-        TOP_CLASSES, subject_sections, with_rank_columns)
+        ORDER_KEYS, ranked_triples)
     t = spark.createDataFrame(
         [(s, p, o, il, None, None) for s, p, o, il in _RANK_TRIPLES],
         vocab.TRIPLE_SCHEMA)
-    secs = subject_sections(t)
-    r = (with_rank_columns(t)
-         .join(secs, "subj", "left")
-         .withColumn("section",
-                     F.coalesce("section", F.lit(len(TOP_CLASSES)))))
-    w = Window.orderBy("section", "subj_rank", "pred_rank", "obj_rank",
-                       "subj", "pred", "obj")
-    return r.select(F.row_number().over(w).alias("pos"),
-                    "subj", "pred", "obj")
+    w = Window.orderBy(*ORDER_KEYS)
+    return ranked_triples(t).select(F.row_number().over(w).alias("pos"),
+                                    "subj", "pred", "obj")
 
 
 def _q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

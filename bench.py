@@ -4,6 +4,8 @@ Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
 line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ..., "triples_per_sec": ..., ...}.
+Without $SPARK_GRAFT_CPUS it takes the cores this process may run on;
+the driver heap is a quarter of MemTotal, at most 16g.
 
 The KG pipeline (the engine's raison d'etre) is benched end-to-end:
 synthesized pages (BASELINE input shape) are materialized to a cached
@@ -21,7 +23,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) \
+    or len(os.sched_getaffinity(0))
 CACHE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                          ".bench_cache")
 
@@ -45,6 +48,14 @@ def _ensure_pages(spark, n: int) -> str:
     return path
 
 
+def _driver_memory() -> str:
+    """A quarter of MemTotal, at most get_spark's 16g default."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f
+                  if line.startswith("MemTotal:"))
+    return f"{max(1, min(16, kb // 4 // 1024 ** 2))}g"
+
+
 def _force(df) -> int:
     """Execute the full plan without sink cost; return row count."""
     df.write.format("noop").mode("overwrite").save()
@@ -60,7 +71,7 @@ def main() -> None:
     from pyontutils_spark.synth.lexicon import make_lexicon
 
     spark = get_spark("bench", cores=CPUS, shuffle_partitions=CPUS,
-                      driver_memory="32g")
+                      driver_memory=_driver_memory())
 
     timings: dict[str, float] = {}
     extras: dict[str, float] = {}

@@ -15,9 +15,12 @@ the reference's canonical serializer planning phase
   structural nodes are skolemized content-hash IRIs (kernel.ids), the
   design the reference itself points at (``utils_extra.py:31-32``)
 
-The output of ``canonical_order`` is byte-stable under any input
-partitioning/row order — the table analog of ttlser's byte-identical
-golden files (``ttlser/test/test_ttlser.py:129-173``).
+``ranked_triples`` adds the rank and section columns and
+``ORDER_KEYS`` names the sort over them; ``canonical_order`` is the one
+ordering built from both (eager: one local checkpoint job ranks every
+triple once, then one partition sorts them).  Its output is byte-stable
+under any input partitioning/row order — the table analog of ttlser's
+byte-identical golden files (``ttlser/test/test_ttlser.py:129-173``).
 
 Checksums: ``order_invariant_checksum`` reproduces ``OrderInvariantHash``
 (``pyontutils/utils_extra.py:23-67``) exactly (sha256 over sorted triple
@@ -123,23 +126,41 @@ def subject_sections(triples: DataFrame) -> DataFrame:
     return typed
 
 
-def canonical_order(triples: DataFrame) -> DataFrame:
-    """Globally ordered triple table (range-partitioned sort — Spark's
-    orderBy samples ranges, so this scales): subjects in topClasses
-    type sections first (orderSubjects semantics), then deterministic
-    (subj, pred, obj) rank order within."""
-    secs = subject_sections(triples)
-    n_sections = len(TOP_CLASSES)
+#: the canonical sort keys of a :func:`ranked_triples` table: section,
+#: then the three ranks, then the raw terms as the tie-break (two IRIs
+#: can share a natsort rank, e.g. ``x01``/``x1`` or ``A``/``a``).
+ORDER_KEYS = ("section", "subj_rank", "pred_rank", "obj_rank",
+              "subj", "pred", "obj")
+_RANK_COLS = ORDER_KEYS[:4]
+
+
+def ranked_triples(triples: DataFrame) -> DataFrame:
+    """``triples`` plus the :data:`ORDER_KEYS` columns it lacks: the
+    three ranks and the subject's type section (the remainder section
+    ``len(TOP_CLASSES)`` when it has none)."""
     # No explicit broadcast hint: in real OWL ontologies nearly every
     # subject is typed owl:Class, so the section table scales with
     # entity count — let AQE pick broadcast vs shuffle by actual size.
     return (with_rank_columns(triples)
-            .join(secs, "subj", "left")
+            .join(subject_sections(triples), "subj", "left")
             .withColumn("section",
-                        F.coalesce("section", F.lit(n_sections)))
-            .orderBy("section", "subj_rank", "pred_rank", "obj_rank",
-                     "subj", "pred", "obj")
-            .drop("subj_rank", "pred_rank", "obj_rank", "section"))
+                        F.coalesce("section", F.lit(len(TOP_CLASSES)))))
+
+
+def canonical_order(triples: DataFrame) -> DataFrame:
+    """The triples in canonical order, as ONE sorted partition: subjects
+    in topClasses type sections first (orderSubjects semantics), then
+    deterministic (subj, pred, obj) rank order within.
+
+    Eager: the ranks are computed once, in parallel, by one local
+    checkpoint job; the result is sorted inside the single partition
+    that consumes it.  A global (range-partitioned) sort would first
+    run a sampling job that re-evaluates the Python rank UDFs, then
+    shuffle every ranked row — all to feed the one task that writes
+    the one canonical file anyway."""
+    return (ranked_triples(triples).localCheckpoint()
+            .coalesce(1).sortWithinPartitions(*ORDER_KEYS)
+            .drop(*_RANK_COLS))
 
 
 # ---------------------------------------------------------------------------

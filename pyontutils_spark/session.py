@@ -28,6 +28,8 @@ def get_spark(app: str = "pyontutils_spark",
     # stage).  Parameterised: SPARK_GRAFT_LOCAL_DIR overrides; default
     # to tmpfs when present (measured ~10% on shuffle-heavy graph
     # iteration plus far lower variance), else leave Spark's default.
+    # The tmpfs default is per OS user (uid suffix): /dev/shm is shared
+    # by every user of the host, and another user's dir is not ours.
     # Spark itself prefers SPARK_LOCAL_DIRS over spark.local.dir, so
     # when that is set there is no default, and the dirs it names are
     # the ones the compression choice below looks at.  Cluster managers
@@ -36,7 +38,7 @@ def get_spark(app: str = "pyontutils_spark",
     env_dirs = os.environ.get("SPARK_LOCAL_DIRS")
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if local_dir is None and not env_dirs and os.path.isdir("/dev/shm"):
-        local_dir = "/dev/shm/spark-graft-local"
+        local_dir = f"/dev/shm/spark-graft-local-{os.getuid()}"
     if local_dir:
         os.makedirs(local_dir, exist_ok=True)
     scratch = (env_dirs or local_dir or "").split(",")

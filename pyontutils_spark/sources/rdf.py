@@ -9,9 +9,11 @@
 - ``read_rdf``: the reference's parse-with-format-fallback
   (``ttlser/ttlser/ttlfmt.py:75,78-100``) — extension dispatch, then
   the ttlfmt try-order turtle -> json-ld -> nt -> rdf-xml.
-- ``write_ntriples``: canonical ordered NT dump (sorted via
-  operators/ordering, formatted JVM-side); ``write_nquads``: the
-  distributed, one-part-file-per-task N-Quads dump.
+- ``write_ntriples``: canonical ordered NT dump (ranked once and
+  sorted in its one writer partition by
+  ``operators.ordering.canonical_order``, formatted JVM-side);
+  ``write_nquads``: the distributed, one-part-file-per-task N-Quads
+  dump.
 - ``nifttl_per_graph``: one nifttl document per graph, rendered in
   parallel.
 - ``write_turtle_string`` / ``write_nifttl_string`` /
@@ -177,16 +179,17 @@ def _nt_terms():
 def write_ntriples(triples: DataFrame, path: str) -> None:
     """Canonically ordered N-Triples dump (JVM-side formatting).
 
-    Scale boundary: the final ``coalesce(1)`` is inherent to "one
-    canonical text file" — the sort itself is a distributed
-    range-partitioned orderBy, but the write funnels through one task.
+    Scale boundary: one canonical text file is written by one task.
+    ``canonical_order`` ranks the triples in parallel (one local
+    checkpoint job) and hands that task its single sorted partition, so
+    no triple row is shuffled; the sort and the write are serial.
     Use this for ontology-file-sized graphs (the ttlfmt nt target); the
     bulk corpus path is the partitioned catalog
     (``plans/catalog.write_triples``), :func:`write_nquads`, or
     ``nifttl_per_graph`` for many-files output."""
     line = F.concat(_nt_terms(), F.lit(" ."))
     (canonical_order(triples).select(line.alias("value"))
-     .coalesce(1).write.mode("overwrite").text(path))
+     .write.mode("overwrite").text(path))
 
 
 def write_nquads(triples: DataFrame, path: str,
@@ -228,7 +231,7 @@ def _cull(prefix_map, rows) -> dict:
 
 def write_turtle_string(triples: DataFrame, prefix_map=None) -> str:
     """Deterministic turtle text for a small graph (driver-side format
-    of the distributively-ordered triples) — the engine analog of
+    of the canonically ordered triples) — the engine analog of
     ``OntGraph.write`` (``pyontutils/core.py:504-509``)."""
     pm = prefix_map or DEFAULT_PREFIXES
     return format_turtle(_rows(canonical_order(triples)), pm)

@@ -7,8 +7,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from pyontutils_spark.kernel.curies import PrefixMap
+from pyontutils_spark.kernel.curies import DEFAULT as PREFIXES, PrefixMap
+from pyontutils_spark.kernel.norm import natsort_key, object_sort_key
 from pyontutils_spark.operators import vocab
+from pyontutils_spark.operators.ordering import canonical_order
 from pyontutils_spark.sources.rdf import (
     read_ntriples, read_obo, write_ntriples, write_turtle_string)
 
@@ -45,6 +47,60 @@ def test_nt_write_deterministic_bytes(spark, tdf, tmp_path):
         with open(os.path.join(path, files[0]), "rb") as f:
             outs.append(f.read())
     assert outs[0] == outs[1] == outs[2]
+
+
+_XSD_INT = "http://www.w3.org/2001/XMLSchema#integer"
+# Rank ties: natsort case-folds (A/a, p/P) and strips leading zeros
+# (x01/x1); the integer literals 01/1 share their numeric part.  Only
+# the raw-term tie-break keys order these rows.
+TIES = [(s, p, o, il, _XSD_INT if il else None, None)
+        for s in ("http://e/a", "http://e/x1", "http://e/A", "http://e/x01")
+        for p in ("http://e/p", "http://e/P")
+        for o, il in (("1", True), ("http://e/a", False), ("01", True),
+                      ("http://e/A", False))]
+
+
+def _nt_bytes(df, path) -> bytes:
+    write_ntriples(df, path)
+    files = [f for f in os.listdir(path) if f.startswith("part-")]
+    assert len(files) == 1
+    with open(os.path.join(path, files[0]), "rb") as f:
+        return f.read()
+
+
+def _tie_sort_key(t):
+    s, p, o, il, dt, lg = t
+    return (natsort_key(PREFIXES.qname(s)), natsort_key(PREFIXES.qname(p)),
+            object_sort_key(o, il, dt, lg,
+                            qname=None if il else PREFIXES.qname(o)),
+            s, p, o)
+
+
+def test_nt_tie_breaks_match_kernel_sort(spark, tmp_path):
+    """Rows whose ranks tie are ordered by (subj, pred, obj) under any
+    input partitioning, exactly as a pure-Python sort by the kernel key
+    functions orders them."""
+    tdf = spark.createDataFrame(TIES, vocab.TRIPLE_SCHEMA)
+    outs = {_nt_bytes(tdf.repartition(parts), str(tmp_path / f"o{parts}"))
+            for parts in (1, 3, 7)}
+    assert len(outs) == 1
+    expected = "".join(
+        f"<{s}> <{p}> " + (f'"{o}"^^<{dt}>' if il else f"<{o}>") + " .\n"
+        for s, p, o, il, dt, _ in sorted(TIES, key=_tie_sort_key))
+    assert outs.pop() == expected.encode()
+
+
+def test_canonical_order_sorts_in_one_partition(spark):
+    """The ranks are computed once, in the checkpoint job; the returned
+    plan only sorts that one partition: no range-partition exchange
+    (whose sampling job re-runs the rank UDFs) and no Python stage."""
+    tdf = spark.createDataFrame(TIES, vocab.TRIPLE_SCHEMA).repartition(7)
+    ordered = canonical_order(tdf)
+    plan = ordered._jdf.queryExecution().executedPlan().toString()
+    assert "rangepartitioning" not in plan.lower()
+    assert "EvalPython" not in plan
+    assert ordered.rdd.getNumPartitions() == 1
+    assert ordered.columns == tdf.columns
 
 
 def test_turtle_deterministic_under_shuffle(spark, tdf):

@@ -1268,7 +1268,7 @@ def _q_canonical_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-padded locals so the oracle can rank lexicographically.  The
     positions come from a single-partition ``row_number`` window over
     the production sort (``ranked_triples`` + ``ORDER_KEYS``, the ones
-    canonical_order uses); fixture-scale only."""
+    canonically_ordered uses); fixture-scale only."""
     from pyspark.sql import Window
 
     from pyontutils_spark.operators.ordering import (

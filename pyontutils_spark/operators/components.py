@@ -13,6 +13,12 @@ Label groups reach the components through a ``min`` aggregate: each
 those star edges go straight into the rounds.  No window sorts a label
 group, so a label shared by 10^6 IRIs is one partial min per map task.
 
+The rewrite dedups only the rows that touch the mapping: a triple the
+mapping does not name passes through unshuffled, and only the rewritten
+and provenance rows meet in one ``distinct`` (exact for a set input and
+a closed mapping, see :func:`rewrite_triples`).  There is no distinct
+over every triple.
+
 The component computation is the alternating large-star/small-star
 iteration (hash-partitioned equi-joins; converges in O(log n) rounds on
 path graphs — the public MapReduce CC algorithm of Kiveris et al.,
@@ -210,6 +216,30 @@ def canonical_mapping_from_labels(entity_labels: DataFrame) -> DataFrame:
                               pre_deduped=False)
 
 
+def _flagged_join(triples: DataFrame, mapping: DataFrame,
+                  broadcast: bool | None) -> DataFrame:
+    """The rewrite join of :func:`rewrite_triples`: each triple with its
+    subj/obj IRIs mapped, plus ``_touched`` — true when its subject or
+    its IRI object matched a mapping row."""
+    hint = F.broadcast if broadcast else (lambda df: df)
+    msub = mapping.withColumnRenamed("iri", "subj") \
+                  .withColumnRenamed("canonical_iri", "subj_canon")
+    mobj = mapping.withColumnRenamed("iri", "obj") \
+                  .withColumnRenamed("canonical_iri", "obj_canon")
+    obj_canon = F.when(F.col("obj_is_literal"), None) \
+        .otherwise(F.col("obj_canon"))
+    return (triples
+            .join(hint(msub), "subj", "left")
+            .join(hint(mobj), "obj", "left")
+            .select(
+                F.coalesce("subj_canon", "subj").alias("subj"),
+                "pred",
+                F.coalesce(obj_canon, "obj").alias("obj"),
+                "obj_is_literal", "obj_datatype", "obj_lang",
+                (F.col("subj_canon").isNotNull() | obj_canon.isNotNull())
+                .alias("_touched")))
+
+
 def rewrite_triples(triples: DataFrame, mapping: DataFrame,
                     broadcast: bool | None = None) -> DataFrame:
     """Replace subj/obj IRIs through (iri -> canonical_iri); literals
@@ -217,28 +247,42 @@ def rewrite_triples(triples: DataFrame, mapping: DataFrame,
     Returns rewritten triples unioned with owl:sameAs provenance triples
     (non-canonical -> canonical, like swapUriSwitch ontutils.py:528).
 
+    Only the rows that touch the mapping are deduplicated: the result
+    is ``untouched ∪ distinct(touched ∪ provenance)``, so the one
+    exchange reads those rows, never every triple.  Exact under two
+    preconditions:
+
+    - ``triples`` is a set (no duplicate rows);
+    - ``mapping`` is closed: every ``canonical_iri`` also appears as an
+      ``iri`` (a root maps to itself, as in :func:`canonical_mapping`
+      and ``filters.replacement_mapping``).
+
+    Then an untouched row names no mapped IRI, while every rewritten
+    row and every provenance row names at least one, so the two parts
+    cannot share a row.  Nothing checks either: a duplicate input row
+    that the mapping does not touch, or (with an unclosed mapping) a
+    rewritten row equal to an untouched one, comes out twice.
+
+    The flagged join is materialized once by a local checkpoint that
+    both parts read (plain branches would run the input plan twice).
+    The checkpoint is not eager, but under AQE building it plans the
+    join: the call itself runs the input's and the join's shuffle and
+    broadcast stages; the checkpoint job runs at the first action.  The
+    checkpoint backs the returned frame, which therefore pins a full
+    copy of the rewritten triples in the block manager for as long as
+    the frame lives.
+
     ``broadcast``: ``True`` forces a broadcast hint on the mapping side
     — correct ONLY for curated replacement maps known to be small
-    (uriswitch / necromancy, dozens of rows).  The default ``None``
-    lets Catalyst/AQE choose: after a sameAs connected-components pass
-    over a web-scale corpus the mapping is proportional to the ENTITY
-    COUNT, and a forced broadcast would die at the driver — the
+    (uriswitch / necromancy, dozens of rows); a hand-made map must be
+    closed too (``filters.replacement_mapping`` closes its map).  The
+    default ``None`` lets Catalyst/AQE choose: after a sameAs
+    connected-components pass over a web-scale corpus the mapping is
+    proportional to the ENTITY COUNT, and a forced broadcast would die at the driver — the
     canonicalization path must stay a plain hash-partitioned join that
     AQE may *choose* to broadcast when runtime stats say it fits."""
-    hint = F.broadcast if broadcast else (lambda df: df)
-    msub = mapping.withColumnRenamed("iri", "subj") \
-                  .withColumnRenamed("canonical_iri", "subj_canon")
-    mobj = mapping.withColumnRenamed("iri", "obj") \
-                  .withColumnRenamed("canonical_iri", "obj_canon")
-    rewritten = (triples
-                 .join(hint(msub), "subj", "left")
-                 .join(hint(mobj), "obj", "left")
-                 .select(
-                     F.coalesce("subj_canon", "subj").alias("subj"),
-                     "pred",
-                     F.when(F.col("obj_is_literal"), F.col("obj"))
-                      .otherwise(F.coalesce("obj_canon", "obj")).alias("obj"),
-                     "obj_is_literal", "obj_datatype", "obj_lang"))
+    joined = _flagged_join(triples, mapping, broadcast) \
+        .localCheckpoint(eager=False)
     prov = (mapping.filter(F.col("iri") != F.col("canonical_iri"))
             .select(F.col("iri").alias("subj"),
                     F.lit(vocab.OWL_SAMEAS).alias("pred"),
@@ -246,4 +290,6 @@ def rewrite_triples(triples: DataFrame, mapping: DataFrame,
                     F.lit(False).alias("obj_is_literal"),
                     F.lit(None).cast("string").alias("obj_datatype"),
                     F.lit(None).cast("string").alias("obj_lang")))
-    return rewritten.unionByName(prov).distinct()
+    touched = joined.filter("_touched").drop("_touched")
+    return (joined.filter(~F.col("_touched")).drop("_touched")
+            .unionByName(touched.unionByName(prov).distinct()))

@@ -56,11 +56,17 @@ def deprecated_subjects(triples: DataFrame) -> DataFrame:
 def replacement_mapping(triples: DataFrame) -> DataFrame:
     """(iri -> canonical_iri) from replacedBy: triples — the necromancy
     resurrection map (necromancy.py:134), consumable by
-    components.rewrite_triples."""
-    return (triples.filter(F.col("pred") == vocab.REPLACED_BY)
-            .select(F.col("subj").alias("iri"),
-                    F.col("obj").alias("canonical_iri"))
-            .distinct())
+    components.rewrite_triples.  Closed: each replacement target that is
+    not itself replaced maps to itself, so every ``canonical_iri`` is
+    also an ``iri``."""
+    pairs = (triples.filter(F.col("pred") == vocab.REPLACED_BY)
+             .select(F.col("subj").alias("iri"),
+                     F.col("obj").alias("canonical_iri"))
+             .distinct())
+    roots = (pairs.select(F.col("canonical_iri").alias("iri"),
+                          "canonical_iri").distinct()
+             .join(pairs.select("iri"), "iri", "left_anti"))
+    return pairs.unionByName(roots)
 
 
 def uri_frequency(triples: DataFrame, min_count: int = 3,

@@ -16,10 +16,11 @@ the reference's canonical serializer planning phase
   design the reference itself points at (``utils_extra.py:31-32``)
 
 ``ranked_triples`` adds the rank and section columns and
-``ORDER_KEYS`` names the sort over them; ``canonical_order`` is the one
-ordering built from both (eager: one local checkpoint job ranks every
-triple once, then one partition sorts them).  Its output is byte-stable
-under any input partitioning/row order — the table analog of ttlser's
+``ORDER_KEYS`` names the sort over them; ``canonically_ordered`` is the
+one ordering built from both, scoped to a ``with`` block (one local
+checkpoint job ranks every triple once, one partition sorts them, and
+the checkpoint is released on exit).  The order is byte-stable under
+any input partitioning/row order — the table analog of ttlser's
 byte-identical golden files (``ttlser/test/test_ttlser.py:129-173``).
 
 Checksums: ``order_invariant_checksum`` reproduces ``OrderInvariantHash``
@@ -31,6 +32,9 @@ and aggregates without a sort.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -147,20 +151,30 @@ def ranked_triples(triples: DataFrame) -> DataFrame:
                         F.coalesce("section", F.lit(len(TOP_CLASSES)))))
 
 
-def canonical_order(triples: DataFrame) -> DataFrame:
-    """The triples in canonical order, as ONE sorted partition: subjects
-    in topClasses type sections first (orderSubjects semantics), then
-    deterministic (subj, pred, obj) rank order within.
+@contextmanager
+def canonically_ordered(triples: DataFrame) -> Iterator[DataFrame]:
+    """The triples in canonical order, as ONE sorted partition, valid
+    inside the ``with`` block: subjects in topClasses type sections
+    first (orderSubjects semantics), then deterministic (subj, pred,
+    obj) rank order within.
 
-    Eager: the ranks are computed once, in parallel, by one local
-    checkpoint job; the result is sorted inside the single partition
-    that consumes it.  A global (range-partitioned) sort would first
+    On entry one local checkpoint job ranks every triple once, in
+    parallel; the block's frame sorts those rows inside the single
+    partition that consumes them, and the checkpoint's blocks are
+    released on exit.  A global (range-partitioned) sort would first
     run a sampling job that re-evaluates the Python rank UDFs, then
     shuffle every ranked row — all to feed the one task that writes
-    the one canonical file anyway."""
-    return (ranked_triples(triples).localCheckpoint()
-            .coalesce(1).sortWithinPartitions(*ORDER_KEYS)
-            .drop(*_RANK_COLS))
+    the one canonical file anyway.  A ``persist`` scope would release
+    through the public API, but it costs one or two more jobs per
+    write (the cache's own query stage, plus ``count``'s aggregate)
+    and wrote no faster on the serialize input."""
+    ranked = ranked_triples(triples).localCheckpoint()
+    try:
+        yield (ranked.coalesce(1).sortWithinPartitions(*ORDER_KEYS)
+               .drop(*_RANK_COLS))
+    finally:
+        # the checkpointed RDD is the root of the frame's logical plan
+        ranked._jdf.logicalPlan().rdd().unpersist(True)
 
 
 # ---------------------------------------------------------------------------

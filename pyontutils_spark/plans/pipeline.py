@@ -63,7 +63,12 @@ def canonicalize_triples(triples):
     triple is rewritten through (iri -> canonical) with owl:sameAs
     provenance — the reference's synonym/label collapsing
     (get_label2rows interlex_sql.py:271-282 + switchURIs/swapUriSwitch
-    ontutils.py:71-91, 521-583) as one declarative pass."""
+    ontutils.py:71-91, 521-583) as one declarative pass.
+
+    ``triples`` must be a set (no duplicate rows), as emit's output is:
+    the rewrite dedups only the rows it changes (see
+    ``components.rewrite_triples``), so an input duplicate that the
+    mapping does not touch stays duplicated."""
     from pyspark.sql import functions as F
 
     from ..operators import vocab

@@ -11,7 +11,8 @@
   the ttlfmt try-order turtle -> json-ld -> nt -> rdf-xml.
 - ``write_ntriples``: canonical ordered NT dump (ranked once and
   sorted in its one writer partition by
-  ``operators.ordering.canonical_order``, formatted JVM-side);
+  ``operators.ordering.canonically_ordered``, formatted JVM-side, its
+  checkpoint released after the write);
   ``write_nquads``: the distributed, one-part-file-per-task N-Quads
   dump.
 - ``nifttl_per_graph``: one nifttl document per graph, rendered in
@@ -33,7 +34,7 @@ from ..kernel.curies import DEFAULT as DEFAULT_PREFIXES
 from ..kernel.obo import parse_obo, stanza_triples
 from ..kernel.rdfio import format_turtle
 from ..operators import vocab
-from ..operators.ordering import canonical_order
+from ..operators.ordering import canonically_ordered
 from . import _per_file, _text_files
 
 # Subject / graph position: IRI or blank node.  Blank node labels are
@@ -180,16 +181,17 @@ def write_ntriples(triples: DataFrame, path: str) -> None:
     """Canonically ordered N-Triples dump (JVM-side formatting).
 
     Scale boundary: one canonical text file is written by one task.
-    ``canonical_order`` ranks the triples in parallel (one local
+    ``canonically_ordered`` ranks the triples in parallel (one local
     checkpoint job) and hands that task its single sorted partition, so
-    no triple row is shuffled; the sort and the write are serial.
+    no triple row is shuffled; the sort and the write are serial.  The
+    checkpoint is released when the write is done.
     Use this for ontology-file-sized graphs (the ttlfmt nt target); the
     bulk corpus path is the partitioned catalog
     (``plans/catalog.write_triples``), :func:`write_nquads`, or
     ``nifttl_per_graph`` for many-files output."""
     line = F.concat(_nt_terms(), F.lit(" ."))
-    (canonical_order(triples).select(line.alias("value"))
-     .write.mode("overwrite").text(path))
+    with canonically_ordered(triples) as ordered:
+        ordered.select(line.alias("value")).write.mode("overwrite").text(path)
 
 
 def write_nquads(triples: DataFrame, path: str,
@@ -234,7 +236,9 @@ def write_turtle_string(triples: DataFrame, prefix_map=None) -> str:
     of the canonically ordered triples) — the engine analog of
     ``OntGraph.write`` (``pyontutils/core.py:504-509``)."""
     pm = prefix_map or DEFAULT_PREFIXES
-    return format_turtle(_rows(canonical_order(triples)), pm)
+    with canonically_ordered(triples) as ordered:
+        rows = _rows(ordered)
+    return format_turtle(rows, pm)
 
 
 def write_rdfxml_string(triples: DataFrame, prefix_map=None) -> str:

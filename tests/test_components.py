@@ -6,9 +6,10 @@ provenance (switchURIs/swapUriSwitch semantics)."""
 import pytest
 from pyspark.sql import functions as F
 
+from pyontutils_spark.kernel.norm import natsort_key
 from pyontutils_spark.operators import vocab
 from pyontutils_spark.operators.components import (
-    canonical_mapping, canonical_mapping_from_labels,
+    _flagged_join, canonical_mapping, canonical_mapping_from_labels,
     connected_components_ids, rewrite_triples)
 from pyontutils_spark.synth.sameas import make_sameas_fixture
 
@@ -127,6 +128,87 @@ def test_rewrite_triples_and_provenance(spark):
                for s, p, o, il in got)
 
 
+def _canonicalize_oracle(rows):
+    """Pure-Python canonicalize_triples: IRIs sharing a normalized label
+    (one shared label per group here, no bridges) map to the group's
+    natsort-min member; rewrite subj and IRI obj, add sameAs rows."""
+    groups = {}
+    for s, p, o, lit, _, _ in rows:
+        if p == vocab.RDFS_LABEL:
+            groups.setdefault(o.strip().lower(), set()).add(s)
+    canon = {}
+    for members in groups.values():
+        if len(members) > 1:
+            root = min(members, key=lambda i: (natsort_key(i), i))
+            canon.update({m: root for m in members})
+    out = {(canon.get(s, s), p, o if lit else canon.get(o, o), lit, dt, lg)
+           for s, p, o, lit, dt, lg in rows}
+    return out | {(i, vocab.OWL_SAMEAS, c, False, None, None)
+                  for i, c in canon.items() if i != c}
+
+
+def test_canonicalize_collapsed_triples_appear_once(spark):
+    """Two classes share a label and one page mentions both: their
+    rdf:type rows and the page's two mention rows each collapse onto
+    the canonical IRI and appear once, equal to the set oracle."""
+    from pyontutils_spark.plans.pipeline import canonicalize_triples
+    rows = [(X + "b", vocab.RDFS_LABEL, "Cortex", True, None, None),
+            (X + "a", vocab.RDFS_LABEL, "cortex ", True, None, None),
+            (X + "c", vocab.RDFS_LABEL, "pons", True, None, None),
+            (X + "a", vocab.RDF_TYPE, vocab.OWL_CLASS, False, None, None),
+            (X + "b", vocab.RDF_TYPE, vocab.OWL_CLASS, False, None, None),
+            (X + "c", vocab.RDF_TYPE, vocab.OWL_CLASS, False, None, None),
+            (X + "page", "http://p/about", X + "a", False, None, None),
+            (X + "page", "http://p/about", X + "b", False, None, None),
+            (X + "page", "http://p/about", X + "c", False, None, None)]
+    got = [tuple(r) for r in canonicalize_triples(
+        spark.createDataFrame(rows, vocab.TRIPLE_SCHEMA)).collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == _canonicalize_oracle(rows)
+    assert (X + "a", vocab.RDF_TYPE, vocab.OWL_CLASS, False, None,
+            None) in got
+
+
+def test_rewrite_shuffles_only_touched_rows(spark):
+    """k of N triples touch the mapping: the output's only hash
+    exchange reads the touched and provenance rows, and neither the
+    call nor the collect shuffles all N."""
+    sc = spark.sparkContext
+    n, k = 2_000, 10
+    triples = spark.range(n).select(
+        F.concat(F.lit("http://e/s"), "id").alias("subj"),
+        F.lit("http://p/p").alias("pred"),
+        F.concat(F.lit("http://e/o"), "id").alias("obj"),
+        F.lit(False).alias("obj_is_literal"),
+        F.lit(None).cast("string").alias("obj_datatype"),
+        F.lit(None).cast("string").alias("obj_lang"))
+    # s0..s{k-1} collapse onto s0; closed (s0 maps to itself).  Built
+    # from a range, so its size is known at plan time and both joins
+    # are planned as broadcasts (a Python-local frame's is not: AQE
+    # would switch to broadcast only after shuffling all N triples).
+    mapping = spark.range(k).select(
+        F.concat(F.lit("http://e/s"), "id").alias("iri"),
+        F.lit("http://e/s0").alias("canonical_iri"))
+    # the group also covers the join's stages, which run at the call
+    sc.setJobGroup("rewrite", "rewrite")
+    try:
+        out = rewrite_triples(triples, mapping)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+        got = out.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(got) == n + k - 1  # k-1 sameAs rows
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    written = sum(store.lastStageAttempt(sid).shuffleWriteRecords()
+                  for job in sc.statusTracker().getJobIdsForGroup("rewrite")
+                  for sid in sc.statusTracker().getJobInfo(job).stageIds)
+    # k touched rows + (k - 1) provenance rows, at most
+    assert 0 < written <= 2 * k - 1
+
+
 def test_rewrite_triples_corpus_mapping_not_broadcast(spark):
     """The canonicalization path must NOT force-broadcast the mapping:
     after sameAs CC over a web corpus the (iri -> canonical) map is
@@ -150,15 +232,18 @@ def test_rewrite_triples_corpus_mapping_not_broadcast(spark):
             F.lit(False).alias("obj_is_literal"),
             F.lit(None).cast("string").alias("obj_datatype"),
             F.lit(None).cast("string").alias("obj_lang"))
-        out = rewrite_triples(triples, mapping)
-        plan = out._jdf.queryExecution().executedPlan().toString()
+        # the rewrite reads its join through a checkpoint, so the join
+        # step's own plan is the one inspected
+        plan = _flagged_join(triples, mapping, None) \
+            ._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" not in plan, plan
         # and the rewrite is still correct at the boundaries
+        out = rewrite_triples(triples, mapping)
         got = {r.subj for r in out.filter(~F.col("obj_is_literal"))
                .limit(50).collect()}
         assert got  # non-empty, executed through the shuffle-join plan
         # forced mode still broadcasts (curated-small-map path)
-        forced = rewrite_triples(triples, mapping, broadcast=True)
+        forced = _flagged_join(triples, mapping, True)
         fplan = forced._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in fplan or "broadcast" in fplan.lower()
     finally:

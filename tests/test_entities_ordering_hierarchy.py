@@ -12,7 +12,7 @@ from pyontutils_spark.operators.hierarchy import (
     detect_cycles, drop_nothing, khop_neighborhood, roots_and_leaves,
     subtree_sizes, transitive_closure)
 from pyontutils_spark.operators.ordering import (
-    canonical_order, commutative_checksum, order_invariant_checksum)
+    canonically_ordered, commutative_checksum, order_invariant_checksum)
 
 
 @pytest.fixture(scope="module")
@@ -69,8 +69,8 @@ def test_canonical_order_deterministic(spark, triples):
     (the ttlser test_deterministic pattern)."""
     outs = []
     for parts in (1, 2, 7):
-        ordered = canonical_order(triples.repartition(parts))
-        outs.append([tuple(r) for r in ordered.collect()])
+        with canonically_ordered(triples.repartition(parts)) as ordered:
+            outs.append([tuple(r) for r in ordered.collect()])
     assert outs[0] == outs[1] == outs[2]
     # subjects in natsort qname order: a9 < a10 < b
     subs = [r[0] for r in outs[0]]
@@ -346,7 +346,7 @@ def test_subject_sections_and_sectioned_order(spark):
     wins, untyped subjects in the remainder."""
     from pyontutils_spark.operators import vocab
     from pyontutils_spark.operators.ordering import (
-        TOP_CLASSES, canonical_order, subject_sections)
+        TOP_CLASSES, canonically_ordered, subject_sections)
     owl = "http://www.w3.org/2002/07/owl#"
     rows = [
         ("http://e/zclass", vocab.RDF_TYPE, owl + "Class", False, None, None),
@@ -366,7 +366,8 @@ def test_subject_sections_and_sectioned_order(spark):
     assert secs["http://e/prop"] == 3 and secs["http://e/both"] == 3
     assert secs["http://e/zclass"] == TOP_CLASSES.index(owl + "Class")
     assert "http://e/untyped" not in secs  # remainder handled in order
-    subj_seq = [r.subj for r in canonical_order(t).collect()]
+    with canonically_ordered(t) as ordered:
+        subj_seq = [r.subj for r in ordered.collect()]
     first_pos = {s: subj_seq.index(s) for s in set(subj_seq)}
     assert first_pos["http://e/ont"] < first_pos["http://e/prop"]
     assert first_pos["http://e/prop"] < first_pos["http://e/zclass"]

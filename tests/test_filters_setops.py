@@ -56,6 +56,30 @@ def test_deprecated_and_replacement(spark, t):
     assert ("http://e/dead", vocab.OWL_SAMEAS, "http://e/a") in got
 
 
+def test_replacement_onto_existing_triple_appears_once(spark):
+    """(dead p o) rewrites onto an existing (alive p o): the closed
+    replacement map (alive maps to itself) makes the rewrite dedup that
+    triple, so it appears exactly once."""
+    rows = [("http://e/alive", "http://p/p", "http://e/o", False, None,
+             None),
+            ("http://e/dead", "http://p/p", "http://e/o", False, None,
+             None),
+            ("http://e/dead", vocab.REPLACED_BY, "http://e/alive", False,
+             None, None)]
+    t = spark.createDataFrame(rows, vocab.TRIPLE_SCHEMA)
+    mapping = replacement_mapping(t)
+    assert {(r.iri, r.canonical_iri) for r in mapping.collect()} == {
+        ("http://e/dead", "http://e/alive"),
+        ("http://e/alive", "http://e/alive")}
+    got = [(r.subj, r.pred, r.obj)
+           for r in rewrite_triples(t, mapping).collect()]
+    assert got.count(("http://e/alive", "http://p/p", "http://e/o")) == 1
+    assert sorted(got) == sorted([
+        ("http://e/alive", "http://p/p", "http://e/o"),
+        ("http://e/alive", vocab.REPLACED_BY, "http://e/alive"),
+        ("http://e/dead", vocab.OWL_SAMEAS, "http://e/alive")])
+
+
 def test_uri_frequency(spark, t):
     freq = {r.uri: r["count"] for r in uri_frequency(
         t, min_count=2, min_len=5).collect()}

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from pyontutils_spark.kernel.curies import DEFAULT as PREFIXES, PrefixMap
 from pyontutils_spark.kernel.norm import natsort_key, object_sort_key
 from pyontutils_spark.operators import vocab
-from pyontutils_spark.operators.ordering import canonical_order
+from pyontutils_spark.operators.ordering import canonically_ordered
 from pyontutils_spark.sources.rdf import (
     read_ntriples, read_obo, write_ntriples, write_turtle_string)
 
@@ -95,12 +95,28 @@ def test_canonical_order_sorts_in_one_partition(spark):
     plan only sorts that one partition: no range-partition exchange
     (whose sampling job re-runs the rank UDFs) and no Python stage."""
     tdf = spark.createDataFrame(TIES, vocab.TRIPLE_SCHEMA).repartition(7)
-    ordered = canonical_order(tdf)
-    plan = ordered._jdf.queryExecution().executedPlan().toString()
-    assert "rangepartitioning" not in plan.lower()
-    assert "EvalPython" not in plan
-    assert ordered.rdd.getNumPartitions() == 1
-    assert ordered.columns == tdf.columns
+    with canonically_ordered(tdf) as ordered:
+        plan = ordered._jdf.queryExecution().executedPlan().toString()
+        assert "rangepartitioning" not in plan.lower()
+        assert "EvalPython" not in plan
+        assert ordered.rdd.getNumPartitions() == 1
+        assert ordered.columns == tdf.columns
+
+
+def test_writers_release_their_order_checkpoint(spark, tdf, tmp_path):
+    """Each write drops the local checkpoint its canonical order ranked
+    into: after three writes no RDD of theirs is still stored."""
+    jsc = spark.sparkContext._jsc.sc()
+
+    def stored():
+        info = jsc.getRDDStorageInfo()
+        return {info[i].id() for i in range(len(info))}
+
+    before = stored()
+    write_ntriples(tdf, str(tmp_path / "a.nt"))
+    write_ntriples(tdf.repartition(3), str(tmp_path / "b.nt"))
+    assert write_turtle_string(tdf)
+    assert stored() - before == set()
 
 
 def test_turtle_deterministic_under_shuffle(spark, tdf):

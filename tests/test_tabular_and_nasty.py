@@ -12,7 +12,7 @@ import pytest
 from pyontutils_spark.kernel.norm import XSD
 from pyontutils_spark.operators import vocab
 from pyontutils_spark.operators.ordering import (
-    canonical_order, order_invariant_checksum)
+    canonically_ordered, order_invariant_checksum)
 from pyontutils_spark.sources.tabular import (
     class_records_json, make_catalog_xml, read_table)
 
@@ -80,7 +80,8 @@ def test_nasty_ordering_deterministic(spark):
     outs, sums = [], []
     for parts in (1, 2, 3, 5, 8):
         shuffled = df.repartition(parts)
-        outs.append([tuple(r) for r in canonical_order(shuffled).collect()])
+        with canonically_ordered(shuffled) as ordered:
+            outs.append([tuple(r) for r in ordered.collect()])
         sums.append(order_invariant_checksum(shuffled).collect()[0].checksum)
     assert all(o == outs[0] for o in outs[1:])
     assert all(s == sums[0] for s in sums[1:])

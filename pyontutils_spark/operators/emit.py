@@ -9,7 +9,11 @@ Here each generator is a declarative select; each family dedups itself
 only mentions use ``ilx:isAbout``, only page types type a WebPage.
 
 Page IRIs are minted JVM-side with ``sha2(url, 256)`` (same bytes as
-the kernel's ``page_iri`` — no Python in the hot path).
+the kernel's ``page_iri`` — no Python in the hot path).  The IRI is a
+display form of a 16-byte key, the first 128 bits of the hash: both page
+families dedup on that key and render the IRI only above their
+aggregate, so each exchange moves 16 raw bytes per page instead of the
+57-character IRI.  Key and IRI are a bijection, so the dedup is exact.
 """
 
 from __future__ import annotations
@@ -23,10 +27,21 @@ from . import vocab
 XSD_BOOLEAN = "http://www.w3.org/2001/XMLSchema#boolean"
 
 
+def _page_key(url_col="url") -> F.Column:
+    """16-byte page key: the first 32 hex digits of sha256(url), unhexed."""
+    return F.unhex(F.substring(F.sha2(F.col(url_col), 256), 1, 32))
+
+
+def _page_iri(key: F.Column) -> F.Column:
+    """Render a page key as its IRI.  Spark's ``hex`` is upper-case and
+    kernel.ids.page_iri lower-case, hence the ``lower``."""
+    return F.concat(F.lit(PAGE_NS), F.lower(F.hex(key)))
+
+
 def page_iri_col(url_col="url") -> F.Column:
-    """JVM-side equivalent of kernel.ids.page_iri (sha256 hex[:32])."""
-    return F.concat(F.lit(PAGE_NS),
-                    F.substring(F.sha2(F.col(url_col), 256), 1, 32))
+    """JVM-side equivalent of kernel.ids.page_iri (sha256 hex[:32]): the
+    rendered page key, byte-equal to the kernel's IRI."""
+    return _page_iri(_page_key(url_col))
 
 
 def _triple(subj, pred: str, obj, is_literal: bool,
@@ -38,16 +53,18 @@ def _triple(subj, pred: str, obj, is_literal: bool,
 
 
 def page_type_triples(pages: DataFrame) -> DataFrame:
-    """(page, rdf:type, TEMP:WebPage) — one per distinct url."""
-    return (pages.select(page_iri_col().alias("piri")).distinct()
-            .select(*_triple(F.col("piri"), vocab.RDF_TYPE,
+    """(page, rdf:type, TEMP:WebPage) — one per distinct page key, its
+    IRI rendered above the dedup."""
+    return (pages.select(_page_key().alias("pkey")).distinct()
+            .select(*_triple(_page_iri(F.col("pkey")), vocab.RDF_TYPE,
                              F.lit(vocab.WEBPAGE_CLASS), False)))
 
 
 def mention_triples(linked: DataFrame) -> DataFrame:
-    """(page, ilx.isAbout:, entity) — distinct per (page, entity)."""
-    return (linked.select(page_iri_col().alias("piri"), "iri").distinct()
-            .select(*_triple(F.col("piri"), vocab.IS_ABOUT,
+    """(page, ilx.isAbout:, entity) — distinct per (page key, entity),
+    the page IRI rendered above the dedup."""
+    return (linked.select(_page_key().alias("pkey"), "iri").distinct()
+            .select(*_triple(_page_iri(F.col("pkey")), vocab.IS_ABOUT,
                              F.col("iri"), False)))
 
 

@@ -7,7 +7,7 @@ partitioning must yield the identical triple set and checksum."""
 import pytest
 
 from pyontutils_spark.kernel.ids import graph_checksum, page_iri, triple_bytes
-from pyontutils_spark.operators import emit, mentions as mention_ops
+from pyontutils_spark.operators import emit, mentions as mention_ops, vocab
 from pyontutils_spark.operators.extract import with_extracted_text
 from pyontutils_spark.plans.pipeline import run_triple_factory
 from pyontutils_spark.synth import golden
@@ -136,11 +136,80 @@ def test_distributed_generation_matches_local(spark):
 
 
 def test_page_iri_jvm_matches_kernel(spark, result):
+    """Both page families render their subjects byte-equal to the
+    kernel's page IRI: page types name every input page, mentions only
+    input pages."""
     rows = (result.triples
             .filter("pred = 'http://www.w3.org/1999/02/22-rdf-syntax-ns#type'")
             .filter("obj like '%WebPage'").select("subj").collect())
     want = {page_iri(p["url"]) for p in PAGES}
     assert {r.subj for r in rows} == want
+    about = {r.subj for r in result.triples
+             .filter(result.triples.pred == vocab.IS_ABOUT)
+             .select("subj").distinct().collect()}
+    assert about and about <= want, sorted(about - want)[:4]
+
+
+def test_page_iri_col_parity_edge_urls(spark):
+    """page_iri_col == kernel.ids.page_iri on non-ASCII, empty, ~4 kB
+    and case-only-different urls (Spark's hex is upper-case; a missing
+    lower() shows here)."""
+    urls = ["https://例え.jp/ページ?q=ü", "", "https://x.example/" + "a" * 4096,
+            "https://X.example/Page", "https://x.example/page"]
+    got = (spark.createDataFrame([(u,) for u in urls], "url string")
+           .select("url", emit.page_iri_col().alias("piri")).collect())
+    assert len(got) == len(urls)
+    for r in got:
+        assert r.piri == page_iri(r.url), r.url[:40]
+    assert len({r.piri for r in got}) == len(urls)
+
+
+def _plan_nodes(node, under_exchange=False):
+    """(node, is-below-an-exchange) over a physical plan tree, reading
+    through AQE's wrapper into its current (unexecuted: initial) plan."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.executedPlan()
+    yield node, under_exchange
+    below = under_exchange or node.nodeName() == "Exchange"
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i), below)
+
+
+def test_page_families_shuffle_the_binary_key(spark):
+    """Both page families dedup on the 16-byte page key: every hash
+    exchange of page_triples partitions on a binary column, no exchange
+    carries a string rendering of the page, and the IRI is rendered
+    (concat) only above the exchanges, i.e. above both aggregates."""
+    pages = spark.createDataFrame(
+        [("http://a.example/1",), ("http://a.example/2",),
+         ("http://a.example/1",)], "url string")
+    linked = spark.createDataFrame(
+        [("http://a.example/1", "http://e.example/x"),
+         ("http://a.example/1", "http://e.example/x"),
+         ("http://a.example/2", "http://e.example/y")],
+        "url string, iri string")
+    df = emit.page_triples(pages, linked)
+    nodes = list(_plan_nodes(df._jdf.queryExecution().executedPlan()))
+    exchanges = [n for n, _ in nodes if n.nodeName() == "Exchange"]
+    assert len(exchanges) == 2, [n.nodeName() for n, _ in nodes]
+    for ex in exchanges:
+        part = ex.outputPartitioning()
+        assert part.toString().startswith("hashpartitioning"), part
+        keys = part.expressions()
+        types = [keys.apply(i).dataType().typeName()
+                 for i in range(keys.size())]
+        assert "binary" in types, part.toString()
+        out = ex.output()
+        names = {out.apply(i).name() for i in range(out.size())}
+        assert not names & {"subj", "piri"}, names
+    rendered = [(n, below) for n, below in nodes
+                if "concat(" in n.expressions().toString()]
+    assert len(rendered) == 2, [n.nodeName() for n, _ in rendered]
+    assert not any(below for _, below in rendered)
+    assert sorted(r.subj for r in df.collect()) == sorted(
+        [page_iri("http://a.example/1")] * 2
+        + [page_iri("http://a.example/2")] * 2)
 
 
 def test_canonicalized_triples_match_golden(spark, result):

@@ -5,7 +5,7 @@ Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ..., "triples_per_sec": ..., ...}.
 Without $SPARK_GRAFT_CPUS it takes the cores this process may run on;
-the driver heap is a quarter of MemTotal, at most 16g.
+the driver heap is get_spark's default (a quarter of MemTotal, 1g-16g).
 
 The KG pipeline (the engine's raison d'etre) is benched end-to-end:
 synthesized pages (BASELINE input shape) are materialized to a cached
@@ -48,14 +48,6 @@ def _ensure_pages(spark, n: int) -> str:
     return path
 
 
-def _driver_memory() -> str:
-    """A quarter of MemTotal, at most get_spark's 16g default."""
-    with open("/proc/meminfo") as f:
-        kb = next(int(line.split()[1]) for line in f
-                  if line.startswith("MemTotal:"))
-    return f"{max(1, min(16, kb // 4 // 1024 ** 2))}g"
-
-
 def _force(df) -> int:
     """Execute the full plan without sink cost; return row count."""
     df.write.format("noop").mode("overwrite").save()
@@ -70,8 +62,7 @@ def main() -> None:
     from pyontutils_spark.session import get_spark
     from pyontutils_spark.synth.lexicon import make_lexicon
 
-    spark = get_spark("bench", cores=CPUS, shuffle_partitions=CPUS,
-                      driver_memory=_driver_memory())
+    spark = get_spark("bench", cores=CPUS, shuffle_partitions=CPUS)
 
     timings: dict[str, float] = {}
     extras: dict[str, float] = {}

@@ -882,7 +882,7 @@ def _q_necromancy_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = spark.createDataFrame(
         [(s, p, o, il, None, None) for s, p, o, il in _NECRO_TRIPLES],
         vocab.TRIPLE_SCHEMA)
-    return rewrite_triples(t, replacement_mapping(t), broadcast=True) \
+    return rewrite_triples(t, replacement_mapping(t)) \
         .select("subj", "pred", "obj")
 
 

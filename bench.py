@@ -91,7 +91,8 @@ def main() -> None:
 
     # --- entity canonicalization end-to-end (duplicate-label sameAs
     # candidates -> hub-safe CC -> rewrite join + owl:sameAs prov; the
-    # mapping side is NOT force-broadcast — AQE picks the join) ----------
+    # mapping is broadcast only when its observed size fits the
+    # broadcast threshold) -----------------------------------------------
     from pyontutils_spark.plans.pipeline import canonicalize_triples
 
     trip_path = os.path.join(CACHE_DIR, f"triples_{n_pages}.parquet")

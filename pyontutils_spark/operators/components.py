@@ -17,12 +17,18 @@ The rewrite dedups only the rows that touch the mapping: a triple the
 mapping does not name passes through unshuffled, and only the rewritten
 and provenance rows meet in one ``distinct`` (exact for a set input and
 a closed mapping, see :func:`rewrite_triples`).  There is no distinct
-over every triple.
+over every triple.  The mapping is read once, and its join is a
+broadcast exactly when the mapping's observed size is at most
+``spark.sql.autoBroadcastJoinThreshold``; a larger map gets the shuffle
+join.  No caller chooses.
 
 The component computation is the alternating large-star/small-star
 iteration (hash-partitioned equi-joins; converges in O(log n) rounds on
 path graphs — the public MapReduce CC algorithm of Kiveris et al.,
-re-expressed as DataFrame groupBys).  Node ids are composite
+re-expressed as DataFrame groupBys).  Its input may repeat edges and
+hold self-loops: the loops are dropped, the repeats cost nothing but
+their rows in round 1, and a node whose only edge is a self-loop gets
+no row.  Running out of rounds raises.  Node ids are composite
 ``natsort_key(iri) + "\\x00" + iri`` strings, so the *string* min of a
 component IS the natsort-min member — the deterministic canonical-pick
 rule (FIXTURES.md §7; natsort per ``ttlser/ttlser/serializers.py:25-26``)
@@ -58,8 +64,7 @@ def _symmetric(edges: DataFrame) -> DataFrame:
     )).alias("e")).select("e.u", "e.v"))
 
 
-def _min_neighbor_star(edges: DataFrame, large: bool,
-                       dedup: bool = True) -> DataFrame:
+def _min_neighbor_star(edges: DataFrame, large: bool) -> DataFrame:
     """One star round over symmetric edges.  Emits (t, m) with
     m = min(neighbors(u) ∪ {u}); large-star targets t ∈ N(u), t > u;
     small-star targets {t ∈ N(u): t < u} ∪ {u}.
@@ -73,24 +78,21 @@ def _min_neighbor_star(edges: DataFrame, large: bool,
     buffer).  The hub key's join partition is splittable by AQE
     skew-join; both shuffles hash on ``u`` so the exchange is reused.
 
-    ``dedup=False`` skips the final ``distinct`` — safe ONLY when the
-    output feeds straight into the next star round, whose min-aggregate
-    ignores duplicate rows and whose own ``distinct`` dedups the
-    result; output rows stay bounded by the input edge count either
-    way (round 7: removes one full shuffle per CC iteration)."""
+    Only the small star deduplicates.  The large star's output may
+    repeat rows, because it feeds straight into the small star, whose
+    min aggregate ignores duplicates and whose ``distinct`` dedups the
+    result (one full shuffle less per CC round); its targets exceed
+    ``u >= m``, so it emits no self-loop either."""
     mins = (edges.groupBy("u").agg(F.min("v").alias("mn"))
             .select("u", F.least("mn", F.col("u")).alias("m")))
     j = edges.join(mins, "u")
     if large:
-        out = (j.filter(F.col("v") > F.col("u"))
-               .select(F.col("v").alias("u"), F.col("m").alias("v")))
-    else:
-        out = (j.filter(F.col("v") < F.col("u"))
-               .select(F.col("v").alias("u"), F.col("m").alias("v"))
-               .unionByName(
-                   mins.select("u", F.col("m").alias("v"))))
-    out = out.filter(F.col("u") != F.col("v"))
-    return out.distinct() if dedup else out
+        return (j.filter(F.col("v") > F.col("u"))
+                .select(F.col("v").alias("u"), F.col("m").alias("v")))
+    return (j.filter(F.col("v") < F.col("u"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .unionByName(mins.select("u", F.col("m").alias("v")))
+            .filter(F.col("u") != F.col("v")).distinct())
 
 
 def _min_neighbor_star_collect(edges: DataFrame, large: bool) -> DataFrame:
@@ -110,45 +112,51 @@ def _min_neighbor_star_collect(edges: DataFrame, large: bool) -> DataFrame:
     return out.filter(F.col("u") != F.col("v")).distinct()
 
 
-def connected_components_ids(edges: DataFrame, max_iter: int = 25,
-                             pre_deduped: bool = False) -> DataFrame:
+def connected_components_ids(edges: DataFrame,
+                             max_iter: int = 25) -> DataFrame:
     """edges(u, v) undirected pairs over any orderable id type (long or
-    string) -> (node, component) where component = min id reachable.
-    Alternates large-star/small-star until the edge multiset is stable.
-    ``localCheckpoint`` truncates lineage each round — without it the
-    iterated plan grows without bound and re-executes from the source
-    every round.  The convergence probe is an aggregate-only signature
-    (count + xxhash64 sum in decimal — ANSI-safe, type-agnostic) taken
-    by an ``Observation`` in the checkpoint's own job, not a second one.
+    string) -> (node, component), one row per node, where component =
+    min id reachable.  Alternates large-star/small-star until the edge
+    set is stable.
 
-    ``pre_deduped=True`` skips the initial filter+distinct when the
-    caller guarantees (u != v, distinct) rows — e.g. after an injective
-    id mapping of an already-deduped edge table.  The large-star half
-    of each iteration runs dedup-free (its duplicates are absorbed by
-    the small star's aggregate + final distinct), saving one full
-    shuffle per iteration — measured ~20% on the 1M-edge chain bench,
-    output-identical."""
-    e = edges.select("u", "v")
-    if not pre_deduped:
-        e = e.filter(F.col("u") != F.col("v")).distinct()
-    e = e.localCheckpoint(eager=True)
+    The input needs no dedup: self-loops are dropped by a narrow
+    ``u != v`` filter (a node whose only edge is a loop gets no row),
+    and a repeated edge only repeats rows in round 1's large star,
+    whose duplicates the small star absorbs.  ``localCheckpoint``
+    truncates lineage each round — without it the iterated plan grows
+    without bound and re-executes from the source every round.  The
+    convergence probe is an aggregate-only signature (count + xxhash64
+    sum in decimal — ANSI-safe, type-agnostic) taken by an
+    ``Observation`` in the checkpoint's own job, not a second one; it
+    needs one round more than the edges take to settle.  Raises
+    ``RuntimeError`` when ``max_iter`` rounds end unsettled, rather
+    than return a partial mapping.
+
+    At convergence the edges are a star forest with each component's
+    min at its centre: every non-root node is the ``u`` of exactly one
+    edge and no root is a ``u``, so ``edges ∪ roots`` needs no
+    ``distinct``."""
+    e = (edges.select("u", "v").filter(F.col("u") != F.col("v"))
+         .localCheckpoint(eager=True))
     prev_sig = None
     for _ in range(max_iter):
-        e = _min_neighbor_star(_symmetric(e), large=True, dedup=False)
+        e = _min_neighbor_star(_symmetric(e), large=True)
         obs = Observation()
         e = _min_neighbor_star(_symmetric(e), large=False).observe(
             obs, F.count("*").alias("n"),
             F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("s")
         ).localCheckpoint(eager=True)
-        sig = obs.get
-        if sig == prev_sig:
+        if obs.get == prev_sig:
             break
-        prev_sig = sig
-    # after convergence every edge is (node, root); add singletons' roots
+        prev_sig = obs.get
+    else:
+        raise RuntimeError(
+            f"connected_components_ids did not converge in {max_iter} "
+            "iterations; raise max_iter")
     comp = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
     roots = (comp.select(F.col("component").alias("node"),
                          F.col("component")).distinct())
-    return comp.unionByName(roots).distinct()
+    return comp.unionByName(roots)
 
 
 # ---------------------------------------------------------------------------
@@ -170,10 +178,10 @@ def _natsort_id(col: str):
     return F.concat_ws(_NK_SEP, natsort_key_udf(col), F.col(col))
 
 
-def _components_by_iri(ids: DataFrame, pre_deduped: bool) -> DataFrame:
+def _components_by_iri(ids: DataFrame) -> DataFrame:
     """CC over composite-id edges (u, v) -> (iri, canonical_iri), split
     back out of the ids."""
-    comp = connected_components_ids(ids, pre_deduped=pre_deduped)
+    comp = connected_components_ids(ids)
     return comp.select(
         F.substring_index("node", _NK_SEP, -1).alias("iri"),
         F.substring_index("component", _NK_SEP, -1).alias("canonical_iri"))
@@ -200,37 +208,52 @@ def canonical_mapping(sameas_edges: DataFrame,
            .filter(F.col("_ra") != F.col("_rb")).distinct())
     return _components_by_iri(
         raw.select(_natsort_id("_ra").alias("u"),
-                   _natsort_id("_rb").alias("v")), pre_deduped=True)
+                   _natsort_id("_rb").alias("v")))
 
 
 def canonical_mapping_from_labels(entity_labels: DataFrame) -> DataFrame:
     """entity_labels(iri, label_norm) -> (iri, canonical_iri) for every
     IRI that shares a normalized label with another, transitively;
     canonical = natsort-min member.  The group min's own ``u == v`` edge
-    and the repeat edge of an IRI whose labels share a min are dropped
-    by the component input's dedup; a label of one IRI yields no row."""
+    is dropped by the components' self-loop filter and the repeat edge of
+    an IRI whose labels share a min is absorbed by round 1; a label of
+    one IRI yields no row."""
     ids = (entity_labels.filter(F.col("iri").isNotNull())
            .select("label_norm", _natsort_id("iri").alias("u")))
     mins = ids.groupBy("label_norm").agg(F.min("u").alias("v"))
-    return _components_by_iri(ids.join(mins, "label_norm").select("u", "v"),
-                              pre_deduped=False)
+    return _components_by_iri(ids.join(mins, "label_norm").select("u", "v"))
 
 
-def _flagged_join(triples: DataFrame, mapping: DataFrame,
-                  broadcast: bool | None) -> DataFrame:
+def _materialized_mapping(mapping: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``mapping`` read once, by an eager local checkpoint whose job also
+    observes the bytes of its two IRI columns -> (checkpoint, join
+    side).  The join side is the checkpoint with a broadcast hint
+    exactly when that size is at most
+    ``spark.sql.autoBroadcastJoinThreshold`` (never when it is -1).
+    Spark cannot size a computed mapping at plan time, so without the
+    hint a small map is broadcast only if AQE sees its stage finish
+    before the triples' exchange starts.  Only joins read the hinted
+    frame: Spark warns about a hint anywhere else."""
+    obs = Observation()
+    m = mapping.observe(
+        obs, F.sum(F.octet_length("iri") + F.octet_length("canonical_iri"))
+        .alias("bytes")).localCheckpoint(eager=True)
+    limit = (mapping.sparkSession._jsparkSession.sessionState().conf()
+             .autoBroadcastJoinThreshold())
+    return m, (F.broadcast(m) if (obs.get["bytes"] or 0) <= limit else m)
+
+
+def _flagged_join(triples: DataFrame, mapping: DataFrame) -> DataFrame:
     """The rewrite join of :func:`rewrite_triples`: each triple with its
     subj/obj IRIs mapped, plus ``_touched`` — true when its subject or
     its IRI object matched a mapping row."""
-    hint = F.broadcast if broadcast else (lambda df: df)
-    msub = mapping.withColumnRenamed("iri", "subj") \
-                  .withColumnRenamed("canonical_iri", "subj_canon")
-    mobj = mapping.withColumnRenamed("iri", "obj") \
-                  .withColumnRenamed("canonical_iri", "obj_canon")
+    msub = mapping.selectExpr("iri AS subj", "canonical_iri AS subj_canon")
+    mobj = mapping.selectExpr("iri AS obj", "canonical_iri AS obj_canon")
     obj_canon = F.when(F.col("obj_is_literal"), None) \
         .otherwise(F.col("obj_canon"))
     return (triples
-            .join(hint(msub), "subj", "left")
-            .join(hint(mobj), "obj", "left")
+            .join(msub, "subj", "left")
+            .join(mobj, "obj", "left")
             .select(
                 F.coalesce("subj_canon", "subj").alias("subj"),
                 "pred",
@@ -240,8 +263,7 @@ def _flagged_join(triples: DataFrame, mapping: DataFrame,
                 .alias("_touched")))
 
 
-def rewrite_triples(triples: DataFrame, mapping: DataFrame,
-                    broadcast: bool | None = None) -> DataFrame:
+def rewrite_triples(triples: DataFrame, mapping: DataFrame) -> DataFrame:
     """Replace subj/obj IRIs through (iri -> canonical_iri); literals
     untouched.  The switchURIs operation (ontutils.py:71-91) as joins.
     Returns rewritten triples unioned with owl:sameAs provenance triples
@@ -263,26 +285,25 @@ def rewrite_triples(triples: DataFrame, mapping: DataFrame,
     that the mapping does not touch, or (with an unclosed mapping) a
     rewritten row equal to an untouched one, comes out twice.
 
+    The mapping is materialized first, in its own eager local
+    checkpoint that both joins and the provenance read, and is
+    broadcast exactly when its observed size (the UTF-8 bytes of its
+    two columns) is at most ``spark.sql.autoBroadcastJoinThreshold``:
+    a curated replacement map or the label mapping of one crawl is
+    broadcast by the plan itself, while the mapping of a sameAs pass
+    over a web-scale corpus, which grows with the entity count, keeps
+    the hash-partitioned join.
+
     The flagged join is materialized once by a local checkpoint that
     both parts read (plain branches would run the input plan twice).
-    The checkpoint is not eager, but under AQE building it plans the
+    That checkpoint is not eager, but under AQE building it plans the
     join: the call itself runs the input's and the join's shuffle and
-    broadcast stages; the checkpoint job runs at the first action.  The
-    checkpoint backs the returned frame, which therefore pins a full
-    copy of the rewritten triples in the block manager for as long as
-    the frame lives.
-
-    ``broadcast``: ``True`` forces a broadcast hint on the mapping side
-    — correct ONLY for curated replacement maps known to be small
-    (uriswitch / necromancy, dozens of rows); a hand-made map must be
-    closed too (``filters.replacement_mapping`` closes its map).  The
-    default ``None`` lets Catalyst/AQE choose: after a sameAs
-    connected-components pass over a web-scale corpus the mapping is
-    proportional to the ENTITY COUNT, and a forced broadcast would die at the driver — the
-    canonicalization path must stay a plain hash-partitioned join that
-    AQE may *choose* to broadcast when runtime stats say it fits."""
-    joined = _flagged_join(triples, mapping, broadcast) \
-        .localCheckpoint(eager=False)
+    broadcast stages; the checkpoint job runs at the first action.  Both
+    checkpoints back the returned frame, which therefore pins the
+    mapping and a full copy of the rewritten triples in the block
+    manager for as long as the frame lives."""
+    mapping, side = _materialized_mapping(mapping)
+    joined = _flagged_join(triples, side).localCheckpoint(eager=False)
     prov = (mapping.filter(F.col("iri") != F.col("canonical_iri"))
             .select(F.col("iri").alias("subj"),
                     F.lit(vocab.OWL_SAMEAS).alias("pred"),

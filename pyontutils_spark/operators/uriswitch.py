@@ -8,7 +8,9 @@ fragment-prefix rules (``swapUriSwitch`` ``pyontutils/ontutils.py:
 
 Spark expression: the fragment rules become one chained
 ``regexp_replace`` column (JVM-side); exact-IRI replacements are a
-broadcast map join (components.rewrite_triples).
+map join (components.rewrite_triples), which broadcasts the map because
+its observed size is under the broadcast threshold (a curated map has
+dozens of rows), with no hint from the caller.
 """
 
 from __future__ import annotations

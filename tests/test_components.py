@@ -9,8 +9,9 @@ from pyspark.sql import functions as F
 from pyontutils_spark.kernel.norm import natsort_key
 from pyontutils_spark.operators import vocab
 from pyontutils_spark.operators.components import (
-    _flagged_join, canonical_mapping, canonical_mapping_from_labels,
-    connected_components_ids, rewrite_triples)
+    _flagged_join, _materialized_mapping, canonical_mapping,
+    canonical_mapping_from_labels, connected_components_ids,
+    rewrite_triples)
 from pyontutils_spark.synth.sameas import make_sameas_fixture
 
 
@@ -29,6 +30,47 @@ def test_connected_components_integer_core(spark):
             for r in connected_components_ids(df).collect()}
     assert comp == {0: 0, 1: 0, 2: 0, 3: 0, 4: 0,
                     10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
+
+
+def test_connected_components_tolerates_duplicates_and_self_loops(spark):
+    """Repeated edges (either direction) and self-loops give exactly the
+    output of the deduplicated, loop-free edge set, one row per node; a
+    node whose only edge is a self-loop (5) gets no row."""
+    clean = [(0, 1), (1, 2), (3, 4)]
+    noisy = clean + [(0, 1), (1, 0), (2, 1), (2, 2), (0, 0), (5, 5),
+                     (4, 3), (3, 4)]
+
+    def rows(edges):
+        df = spark.createDataFrame(edges, "u long, v long")
+        return sorted(tuple(r) for r in connected_components_ids(df)
+                      .collect())
+    assert rows(noisy) == rows(clean) == [
+        (0, 0), (1, 0), (2, 0), (3, 3), (4, 3)]
+
+
+def test_connected_components_raises_when_rounds_run_out(spark):
+    """A 21-node chain converges with max_iter=6 (five rounds plus the
+    round that confirms) and raises with 5, instead of returning the
+    partial mapping of the last round."""
+    df = spark.createDataFrame([(i, i + 1) for i in range(20)],
+                               "u long, v long")
+    comp = connected_components_ids(df, max_iter=6).collect()
+    assert {(r.node, r.component) for r in comp} == {
+        (i, 0) for i in range(21)}
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components_ids(df, max_iter=5)
+
+
+@pytest.mark.parametrize("make", [
+    "sameas_chain_edges", "star_edges", "powerlaw_edges"])
+def test_connected_components_one_row_per_node(spark, make):
+    """The output has no duplicate row: at convergence the edges are a
+    star forest, so ``edges ∪ roots`` is already a set."""
+    from pyontutils_spark.synth import graphs
+    e = getattr(graphs, make)(spark, 3000).selectExpr("a AS u", "b AS v")
+    nodes = e.select("u").union(e.select("v")).distinct().count()
+    comp = connected_components_ids(e)
+    assert comp.count() == comp.select("node").distinct().count() == nodes
 
 
 def test_canonical_mapping_matches_expected(spark, fixture):
@@ -169,23 +211,26 @@ def test_canonicalize_collapsed_triples_appear_once(spark):
             None) in got
 
 
-def test_rewrite_shuffles_only_touched_rows(spark):
-    """k of N triples touch the mapping: the output's only hash
-    exchange reads the touched and provenance rows, and neither the
-    call nor the collect shuffles all N."""
-    sc = spark.sparkContext
-    n, k = 2_000, 10
-    triples = spark.range(n).select(
+def _range_triples(spark, n):
+    """n IRI triples (s{i} p o{i})."""
+    return spark.range(n).select(
         F.concat(F.lit("http://e/s"), "id").alias("subj"),
         F.lit("http://p/p").alias("pred"),
         F.concat(F.lit("http://e/o"), "id").alias("obj"),
         F.lit(False).alias("obj_is_literal"),
         F.lit(None).cast("string").alias("obj_datatype"),
         F.lit(None).cast("string").alias("obj_lang"))
-    # s0..s{k-1} collapse onto s0; closed (s0 maps to itself).  Built
-    # from a range, so its size is known at plan time and both joins
-    # are planned as broadcasts (a Python-local frame's is not: AQE
-    # would switch to broadcast only after shuffling all N triples).
+
+
+def test_rewrite_shuffles_only_touched_rows(spark):
+    """k of N triples touch the mapping: the output's only hash
+    exchange reads the touched and provenance rows, and neither the
+    call nor the collect shuffles all N."""
+    sc = spark.sparkContext
+    n, k = 2_000, 10
+    triples = _range_triples(spark, n)
+    # s0..s{k-1} collapse onto s0; closed (s0 maps to itself).  Small,
+    # so both joins are planned as broadcasts.
     mapping = spark.range(k).select(
         F.concat(F.lit("http://e/s"), "id").alias("iri"),
         F.lit("http://e/s0").alias("canonical_iri"))
@@ -209,13 +254,29 @@ def test_rewrite_shuffles_only_touched_rows(spark):
     assert 0 < written <= 2 * k - 1
 
 
+def test_rewrite_triples_small_local_mapping_broadcast(spark):
+    """A small mapping is broadcast by the plan, whatever its source: a
+    Python-local frame, whose size Spark cannot know at plan time (AQE
+    alone would switch to a broadcast only after shuffling every
+    triple), is sized when the rewrite materializes it."""
+    triples = _range_triples(spark, 2_000)
+    mapping = spark.createDataFrame(
+        [(f"http://e/s{i}", "http://e/s0") for i in range(10)],
+        "iri string, canonical_iri string")
+    plan = _flagged_join(triples, _materialized_mapping(mapping)[1]) \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("BroadcastHashJoin") == 2, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert rewrite_triples(triples, mapping).count() == 2_000 + 9
+
+
 def test_rewrite_triples_corpus_mapping_not_broadcast(spark):
     """The canonicalization path must NOT force-broadcast the mapping:
     after sameAs CC over a web corpus the (iri -> canonical) map is
     proportional to the entity count and a forced broadcast dies at
     the driver.  With the broadcast threshold pinned below the mapping
-    size, the default (auto) plan must contain no BroadcastHashJoin —
-    only shuffle joins AQE can scale."""
+    size, the plan must contain no BroadcastHashJoin — only shuffle
+    joins AQE can scale."""
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1KB")
     try:
@@ -234,7 +295,7 @@ def test_rewrite_triples_corpus_mapping_not_broadcast(spark):
             F.lit(None).cast("string").alias("obj_lang"))
         # the rewrite reads its join through a checkpoint, so the join
         # step's own plan is the one inspected
-        plan = _flagged_join(triples, mapping, None) \
+        plan = _flagged_join(triples, _materialized_mapping(mapping)[1]) \
             ._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" not in plan, plan
         # and the rewrite is still correct at the boundaries
@@ -242,10 +303,6 @@ def test_rewrite_triples_corpus_mapping_not_broadcast(spark):
         got = {r.subj for r in out.filter(~F.col("obj_is_literal"))
                .limit(50).collect()}
         assert got  # non-empty, executed through the shuffle-join plan
-        # forced mode still broadcasts (curated-small-map path)
-        forced = _flagged_join(triples, mapping, True)
-        fplan = forced._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in fplan or "broadcast" in fplan.lower()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 

@@ -6,7 +6,9 @@ The Spark instantiation of the reference's build pipeline
 
 - one linear DAG, no driver-side loops over data
 - all joins broadcast (lexicon/candidates are the small side)
-- each family dedups itself; unions of disjoint families add none
+- each triple family is a set where it is produced (both page families
+  from one page-keyed aggregate); unions of disjoint families add no
+  dedup
 - deterministic output independent of partitioning
 """
 

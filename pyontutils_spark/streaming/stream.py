@@ -8,8 +8,9 @@ streaming queries:
   through the batch factory's own stage (``plans.pipeline.
   mention_linker``: hybrid mentions -> broadcast link) and
   ``emit.page_triples``, emitting page-level triples (a set per batch:
-  each family dedups itself); exactly-once via the streaming checkpoint
-  (committed batch ids) + idempotent parquet writes keyed by batch id.
+  one page-keyed aggregate builds page types and mentions);
+  exactly-once via the streaming checkpoint (committed batch ids) +
+  idempotent parquet writes keyed by batch id.
 - ``mention_rate``: watermarked tumbling-window aggregation of mention
   counts by entity over ``warc_ts`` (late data handled by watermark) —
   the canonical streaming-agg shape.  It keeps the fused mention
@@ -47,7 +48,7 @@ def stream_triples(spark: SparkSession, input_path: str,
     link = mention_linker(spark, lexicon)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        tri = emit.page_triples(batch_df, link(batch_df))
+        tri = emit.page_triples(batch_df, link(batch_df), lexicon)
         (tri.write.mode("overwrite")
          .parquet(os.path.join(out_dir, f"batch={batch_id}")))
 

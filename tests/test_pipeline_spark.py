@@ -5,6 +5,7 @@ reference (ttlser/test/test_ttlser.py:56-74, 129-173): shuffled
 partitioning must yield the identical triple set and checksum."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from pyontutils_spark.kernel.ids import graph_checksum, page_iri, triple_bytes
 from pyontutils_spark.operators import emit, mentions as mention_ops, vocab
@@ -177,39 +178,99 @@ def _plan_nodes(node, under_exchange=False):
 
 
 def test_page_families_shuffle_the_binary_key(spark):
-    """Both page families dedup on the 16-byte page key: every hash
-    exchange of page_triples partitions on a binary column, no exchange
-    carries a string rendering of the page, and the IRI is rendered
-    (concat) only above the exchanges, i.e. above both aggregates."""
+    """Both page families come from one aggregate on the 16-byte page
+    key: page_triples plans exactly one exchange, hash-partitioned on
+    the binary key, whose output carries no string column; the IRI is
+    rendered (concat) only above it, and the dedup on (page key, IRI)
+    above the aggregate adds no exchange."""
     pages = spark.createDataFrame(
         [("http://a.example/1",), ("http://a.example/2",),
          ("http://a.example/1",)], "url string")
     linked = spark.createDataFrame(
-        [("http://a.example/1", "http://e.example/x"),
-         ("http://a.example/1", "http://e.example/x"),
-         ("http://a.example/2", "http://e.example/y")],
-        "url string, iri string")
-    df = emit.page_triples(pages, linked)
+        [("http://a.example/1", 1), ("http://a.example/1", 1),
+         ("http://a.example/2", 2)], "url string, term_id long")
+    lex = [dict(term_id=1, iri="http://e.example/x"),
+           dict(term_id=2, iri="http://e.example/y")]
+    df = emit.page_triples(pages, linked, lex)
     nodes = list(_plan_nodes(df._jdf.queryExecution().executedPlan()))
     exchanges = [n for n, _ in nodes if n.nodeName() == "Exchange"]
-    assert len(exchanges) == 2, [n.nodeName() for n, _ in nodes]
-    for ex in exchanges:
-        part = ex.outputPartitioning()
-        assert part.toString().startswith("hashpartitioning"), part
-        keys = part.expressions()
-        types = [keys.apply(i).dataType().typeName()
-                 for i in range(keys.size())]
-        assert "binary" in types, part.toString()
-        out = ex.output()
-        names = {out.apply(i).name() for i in range(out.size())}
-        assert not names & {"subj", "piri"}, names
-    rendered = [(n, below) for n, below in nodes
+    assert len(exchanges) == 1, [n.nodeName() for n, _ in nodes]
+    part = exchanges[0].outputPartitioning()
+    assert part.toString().startswith("hashpartitioning"), part
+    keys = part.expressions()
+    assert [keys.apply(i).dataType().typeName()
+            for i in range(keys.size())] == ["binary"], part.toString()
+    out = exchanges[0].output()
+    assert "string" not in {out.apply(i).dataType().typeName()
+                            for i in range(out.size())}, out.toString()
+    rendered = [below for n, below in nodes
                 if "concat(" in n.expressions().toString()]
-    assert len(rendered) == 2, [n.nodeName() for n, _ in rendered]
-    assert not any(below for _, below in rendered)
-    assert sorted(r.subj for r in df.collect()) == sorted(
-        [page_iri("http://a.example/1")] * 2
-        + [page_iri("http://a.example/2")] * 2)
+    assert rendered and not any(rendered)
+    # only collect_set's partial aggregate is below the exchange
+    assert [n.nodeName() for n, below in nodes if below
+            and "Aggregate" in n.nodeName()] == ["ObjectHashAggregate"]
+    assert sorted((r.subj, r.obj) for r in df.collect()) == sorted(
+        [(page_iri("http://a.example/1"), vocab.WEBPAGE_CLASS),
+         (page_iri("http://a.example/1"), "http://e.example/x"),
+         (page_iri("http://a.example/2"), vocab.WEBPAGE_CLASS),
+         (page_iri("http://a.example/2"), "http://e.example/y")])
+
+
+def _page(url, text, lang="en"):
+    return (url, None, bytearray(), text, lang)
+
+
+def test_page_triples_parity_edge_cases(spark):
+    """page_triples == mention_triples(linked) ∪ one WebPage type row
+    per distinct page, with: a url in two rows of different partitions,
+    a page with no mentions, a non-en page, a page naming one entity
+    twice, and a page naming two term ids that share one IRI (exactly
+    one ilx:isAbout; fails without the dedup after rendering)."""
+    from pyontutils_spark.plans.pipeline import mention_linker
+    from pyontutils_spark.synth.spark_gen import PAGES_SCHEMA
+    shared = dict(LEX[8], iri=LEX[6]["iri"])  # term ids 6 and 8, one IRI
+    lex = LEX[:8] + [shared] + LEX[9:]
+    u = [f"http://p.example/{i}" for i in range(5)]
+    first = [_page(u[0], "hippocampus and dentate gyrus"),
+             _page(u[1], "nothing to see here"),
+             _page(u[2], "hippocampus and dentate gyrus", lang="de")]
+    second = [_page(u[0], "hippocampus and dentate gyrus"),
+              _page(u[3], "dentate gyrus, then dentate gyrus again"),
+              _page(u[4], "purkinje cell by the nucleus of the "
+                          "solitary tract")]
+    pages = spark.createDataFrame(
+        spark.sparkContext.parallelize(first + second, 2), PAGES_SCHEMA)
+    parts = pages.select("url").rdd.glom().collect()
+    assert [[r.url for r in p].count(u[0]) for p in parts] == [1, 1]
+    linked = mention_linker(spark, lex)(pages).persist()
+    named = {(r.url, r.term_id) for r in linked.collect()}
+    assert {(u[4], 6), (u[4], 8)} <= named
+    assert not any(url in (u[1], u[2]) for url, _ in named)
+    rows = [tuple(r) for r in emit.page_triples(pages, linked, lex).collect()]
+    types = pages.select(emit.page_iri_col().alias("subj")).distinct()
+    want = ({tuple(r) for r in emit.mention_triples(linked).collect()}
+            | {(r.subj, vocab.RDF_TYPE, vocab.WEBPAGE_CLASS, False, None,
+                None) for r in types.collect()})
+    assert len(rows) == len(set(rows))
+    assert set(rows) == want
+    assert [o for s, p, o, *_ in rows
+            if s == page_iri(u[4]) and p == vocab.IS_ABOUT] == [LEX[6]["iri"]]
+    assert {s for s, p, *_ in rows if p == vocab.RDF_TYPE} == {
+        page_iri(x) for x in u}
+    two_iris = lex + [dict(LEX[3], iri="http://e.example/other")]
+    with pytest.raises(ValueError, match="term_id 3"):
+        emit.page_triples(pages, linked, two_iris)
+    linked.unpersist()
+
+
+def test_label_filter_prunes_page_aggregate(result):
+    """Canonicalize reads only the rdfs:label rows: Catalyst folds the
+    page family's CASE predicate to false and drops the branch, so the
+    page-key aggregate never runs for it."""
+    plan = (result.triples.filter(F.col("pred") == vocab.RDFS_LABEL)
+            ._jdf.queryExecution().optimizedPlan().toString())
+    assert "collect_set" not in plan
+    assert "sha2(" not in plan
 
 
 def test_canonicalized_triples_match_golden(spark, result):
@@ -232,12 +293,13 @@ def test_canonicalized_triples_match_golden(spark, result):
 def test_no_aggregate_above_family_union(result):
     """Each triple family dedups where it is produced; their union is a
     set by disjointness, so the optimized plan's root is the Union of
-    the three families, each topped by its own Aggregate."""
+    the two families (page, entity), each topped by its own
+    Aggregate."""
     plan = result.triples._jdf.queryExecution().optimizedPlan()
     assert plan.nodeName() == "Union"
     families = [plan.children().apply(i)
                 for i in range(plan.children().size())]
-    assert [f.nodeName() for f in families] == ["Aggregate"] * 3
+    assert [f.nodeName() for f in families] == ["Aggregate"] * 2
 
 
 def test_entity_triples_disjoint_from_page_families():

@@ -183,10 +183,11 @@ def test_stream_curate_head_equals_batch_funnel(spark, tmp_path):
 
 def test_duplicate_inputs_yield_sets_on_every_path(spark, tmp_path):
     """Each triple family is a set where it is produced, so no path
-    needs a distinct over their union: with a re-crawled url (two rows), a page naming
-    the same entity twice, a repeated lexicon term and a synonym listed
-    twice, batch, resume and streaming outputs hold no duplicate row
-    and equal the golden set, where the reference graph is a set."""
+    needs a distinct over their union: with a re-crawled url (two
+    rows), a page naming the same entity twice, a repeated lexicon term
+    and a synonym listed twice, batch, resume and streaming outputs
+    hold no duplicate row and equal the golden set, where the reference
+    graph is a set."""
     from datetime import timedelta
 
     from pyontutils_spark.operators import emit
